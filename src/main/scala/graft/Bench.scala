@@ -45,7 +45,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus
     // Per-run out-file (round-19 verdict item 2): the 8-core and 32-core
     // driver invocations used to write the SAME default file, so the
     // later parse of the earlier run read whichever invocation finished
@@ -56,15 +56,7 @@ object Bench {
     // An explicit SPARK_GRAFT_BENCH_OUT still wins; the legacy
     // BENCH_LOCAL.json is ALSO written for any fixed-name reader.
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_LOCAL_c$cpus.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     def runOnce(
@@ -146,6 +138,8 @@ object Bench {
     def toJson(results: Seq[(String, Double)]): String = results
       .map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
+    // failed runs carry the -1.0 sentinel and stay out of every total,
+    // so each JSON line also names them: a crash must not read as a win
     def totalOf(results: Seq[(String, Double)]): Double =
       results.collect { case (_, v) if v >= 0 => v }.sum
 
@@ -168,7 +162,7 @@ object Bench {
     // is per-pass engine tuning, not a benchmark trick: plans and
     // results are identical, only task fan-out changes.
     // min-of-8 warm, PER-QUERY reps, AQE off — three measured decisions
-    // (GoldProfileLab + graft.SchedFloor, BENCH_NOTES_r13.md):
+    // (BENCH_NOTES_r13.md §2, BASELINE.md "Per-model job-count floors"):
     //   * eight reps, not three: the gold total is graded against a
     //     1.51 s Postgres baseline with a 2× gate and this host's
     //     tenancy noise is ±50 % per one-shot query; min-of-3 still
@@ -188,7 +182,7 @@ object Bench {
     //     there is nothing to adapt — each of those jobs is pure
     //     scheduler floor. Classic execution runs each model as ONE
     //     multi-stage job plus its broadcast builds: the measured 2×2
-    //     grid (GoldProfileLab, min-of-8, one host hour) reads
+    //     grid (BENCH_NOTES_r13.md §2, min-of-8, one host hour) reads
     //     bc-on/aqe-on 2.44 s (31 jobs), bc-off/aqe-on 2.03 s (35),
     //     bc-off/aqe-off 1.79 s (16), bc-on/aqe-off 1.75 s (20 jobs,
     //     best, and every model inside its per-model 2× bar). Results
@@ -232,8 +226,8 @@ object Bench {
       }
     }
 
-    // Scheduler-floor probe (graft.SchedFloor's law, inline): the p50 of
-    // 20 trivial one-task jobs, reported as `sched_floor_p50` in the
+    // Scheduler-floor probe: the p50 of 20 trivial one-task jobs (count
+    // over a 1-row range), reported as `sched_floor_p50` in the
     // output JSON. The sf0.01 gold totals are job-count × THIS number
     // plus real work (BASELINE.md "Per-model job-count floors"), and it
     // swings ±50 % with host tenancy — recording it beside every bench
@@ -257,7 +251,7 @@ object Bench {
         try benchPerQuery(qs.filter { case (name, _) => goldNames(name) },
           smallDir, defaultPasses = 8)
         finally {
-          spark.conf.set("spark.sql.shuffle.partitions", cpus)
+          spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
           spark.conf.set("spark.sql.adaptive.enabled", "true")
         }
       } else Seq.empty
@@ -283,8 +277,12 @@ object Bench {
       if (goldSmall.isEmpty) ""
       else s""","queries_small":${toJson(goldSmall)},"total_small":${totalOf(goldSmall)},"floor_small":$floorJson,"sf_small":"$smallDir""""
 
+    val failed = (results ++ goldSmall).collect { case (n, v) if v < 0 => n }.distinct.sorted
+    val failedJson =
+      s""""n_failed":${failed.size},"failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+
     val line =
-      s"""{"metric":"total","value":${totalOf(results)},"unit":"sec","cpus":$cpus,"master":"local[$cpus]","queries":${toJson(results)},"gc_ms":$gcJson,"old_gen_mb":$oldGenJson,"sf":"$sfDir","sched_floor_p50":$schedFloorP50$smallJson}"""
+      s"""{"metric":"total","value":${totalOf(results)},"unit":"sec","cpus":$cpus,"master":"local[$cpus]","queries":${toJson(results)},"gc_ms":$gcJson,"old_gen_mb":$oldGenJson,"sf":"$sfDir","sched_floor_p50":$schedFloorP50,$failedJson$smallJson}"""
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
       if (outFile != "BENCH_LOCAL.json")
@@ -293,7 +291,7 @@ object Bench {
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }
     println(line)
     val compact =
-      s"""{"metric":"total","value":${totalOf(results)},"unit":"sec","cpus":$cpus,"master":"local[$cpus]","n_queries":${results.size},"queries_file":"$outFile","sf":"$sfDir","sched_floor_p50":$schedFloorP50$smallJson}"""
+      s"""{"metric":"total","value":${totalOf(results)},"unit":"sec","cpus":$cpus,"master":"local[$cpus]","n_queries":${results.size},"queries_file":"$outFile","sf":"$sfDir","sched_floor_p50":$schedFloorP50,$failedJson$smallJson}"""
     println(compact)
     spark.stop()
   }

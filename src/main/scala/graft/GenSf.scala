@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up generator for scaling-curve runs (SCALE.md's
@@ -60,20 +60,15 @@ object GenSf {
     // (cluster, dim), ±0.05 jitter from xxhash on (vec_id, dim))
     // instead of replicating the base's near-uniform vectors. The
     // uniform corpus is the pinned WORST case for every quantizer
-    // (PqLab's round-9 recall numbers are worst-case-on-worst-case);
-    // real embedding corpora cluster, and this mode is the timing/
-    // recall twin for that regime — in particular the corpus where
-    // trained PQ codebooks (pqCodebookLloyd) separate from seed books.
+    // (SCALE.md "PQ parameter laws (round 9)": its recall numbers are
+    // worst-case-on-worst-case); real embedding corpora cluster, and
+    // this mode is the timing/recall twin for that regime — in
+    // particular the corpus where trained PQ codebooks
+    // (pqCodebookLloyd) separate from seed books.
     // Same replication/id-shift discipline otherwise; timing-only, like
     // every GenSf output.
     val clustered = args.length > 3 && args(3) == "--clustered"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     def read(name: String): DataFrame =

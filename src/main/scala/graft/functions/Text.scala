@@ -55,7 +55,8 @@ object Text {
     * Array-valued — when the caller EXPLODES the grams (every hot path
     * does), use [[explodeNgrams]] instead: building every gram string
     * inside this transform() lambda evaluates interpreted per element
-    * (the LAB_MODE=split law — 2.8× slower and GC-spiky at 5M grams). */
+    * (SCALE.md "x205 splitter shape" — 2.8× slower and GC-spiky at 5M
+    * grams). */
   def wordNgrams(wordsCol: String, n: Int = 3): Column = {
     val parts = (0 until n)
       .map(k => if (k == 0) s"element_at($wordsCol, i)" else s"element_at($wordsCol, i + $k)")
@@ -67,8 +68,8 @@ object Text {
     )
   }
 
-  /** One row per word n-gram, the MEASURED explode shape (BenchLab
-    * LAB_MODE=split): gram POSITIONS explode as ints and each gram
+  /** One row per word n-gram, the MEASURED explode shape (SCALE.md
+    * "x205 splitter shape"): gram POSITIONS explode as ints and each gram
     * string concatenates in the fused Generate+Project — codegen'd
     * against a per-input-row word-array reference — instead of
     * materializing every gram string inside a transform() lambda

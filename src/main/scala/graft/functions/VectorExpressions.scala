@@ -85,7 +85,7 @@ case class FloatVecDot(left: Expression, right: Expression)
   * wrap) to the portable HOF form
   * `aggregate(zip_with(a, b, (x,y) -> (x-y)*(x-y)), 0L, (acc,v) -> acc+v)`
   * — which evaluates its lambdas INTERPRETED per element and allocates a
-  * diffs array per row pair (the LAB_MODE=split law). This expression is
+  * diffs array per row pair (the SCALE.md "x205 splitter shape" law). This expression is
   * the same tight loop inside whole-stage codegen: no allocation, no
   * per-element interpretation. Same-length input contract (every caller
   * quantizes both sides to the same dimensionality); length mismatch

@@ -1471,7 +1471,7 @@ object Corpus {
       // codegen'd against a per-input-row word-array reference. The
       // first form built the chunk STRINGS inside the zip_with lambda —
       // interpreted per element, measured 21× slower at 781 chunks/doc
-      // (BenchLab LAB_MODE=split; SCALE.md "x205 splitter shape").
+      // (SCALE.md "x205 splitter shape").
       .select((Seq(col(idCol)) ++ keep.map(col) :+ col("words") :+
         posexplode(expr(
           "zip_with(concat(array(0L), transform(cuts, c -> c + 1)), " +
@@ -1518,8 +1518,8 @@ object Corpus {
     val small = base.filter(coalesce(nTok, lit(0L)) <= window)
       .select((keepCols :+ col(idCol) :+
         lit(0L).as("chunk_idx") :+ col("__text").as("chunk")): _*)
-    // SHAPE IS MEASURED, NOT GUESSED (BenchLab LAB_MODE=split, 512
-    // docs × 50k tokens = 781 chunks/doc): explode the chunk INDICES
+    // SHAPE IS MEASURED, NOT GUESSED (SCALE.md "x205 splitter shape",
+    // 512 docs × 50k tokens = 781 chunks/doc): explode the chunk INDICES
     // and slice after the Generate. Whole-stage codegen fuses
     // Generate+Project, so the word array is a per-input-row REFERENCE
     // sliced once per output chunk (never copied per row), and the

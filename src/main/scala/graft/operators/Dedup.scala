@@ -909,7 +909,7 @@ object Dedup {
     * mean of the subvectors that chose code c in subspace s. This is
     * how production PQ indexes are actually fit (Jégou et al. 2011 §III
     * trains each subquantizer by k-means); the seed book is the
-    * deterministic worst case PqLab measures against, and on clustered
+    * deterministic worst case SCALE.md "PQ parameter laws" measures against, and on clustered
     * corpora the trained book moves entries onto the density modes,
     * which is where PQ's recall comes from.
     *
@@ -1243,7 +1243,7 @@ object Dedup {
     * hash join into a summing hash-agg, linear in n, then bounded-heap
     * top-k. Where PQ's ADC scans n·m rows (m=8 subspaces), SQ8 scans
     * n·d (d=64): 8× more compute for ~exact recall — the measured
-    * compute/recall trade PqLab's table quantifies. At 100 TB the same
+    * compute/recall trade SCALE.md "SQ8 on the quantizer recall/time axes" quantifies. At 100 TB the same
     * composition rules as PQ apply: route through IVF cells first and
     * SQ8-scan only the probed fraction. */
   def sqSearch(df: DataFrame, idCol: String, vecCol: String,
@@ -2125,7 +2125,7 @@ object Dedup {
         // `nassign` nearest cells, so a near-dup pair is blocked
         // together when ANY of the nassign×nassign cell combinations
         // coincide — candidate work scales ×nassign² in exchange (the
-        // KScale-measured trade; deterministic, so still oracle-able
+        // trade SCALE.md "IVF k-scaling law" measures; deterministic, so still oracle-able
         // with `rn <= nassign` in the assignment CTE)
         val (cents, _) = ivfIndex(df, idCol, vecCol, k, lloydIters = 0)
         Ranks.topKPerGroup(
@@ -2447,7 +2447,7 @@ object Dedup {
     * bit-reproducible and the DuckDB oracle replays it. Routing is
     * approximate at the fine level (the true nearest fine centroid may
     * live under a different coarse parent) — the recall cost is
-    * measured in KScale/SCALE.md, not assumed. Vectors route only to
+    * measured in SCALE.md "IVF k-scaling law", not assumed. Vectors route only to
     * coarse cells that own at least one fine centroid (a childless
     * coarse would otherwise silently drop its vectors). */
   def ivfAssignTwoLevel(df: DataFrame, idCol: String, vecCol: String,

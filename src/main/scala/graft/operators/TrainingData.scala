@@ -4113,33 +4113,6 @@ object TrainingData {
       coPurchasePairs(t).filter(col("w") >= 2).select(col("pa"), col("pb"))
     }
 
-  /** x152's SERVING layout of the edge registry: the symmetric
-    * expansion (pk, other), PRE-PARTITIONED on the iteration join key
-    * `other` — built once per session so every PageRank invocation's
-    * three contribution joins reuse one standing distribution (the
-    * pre-partition-then-pin discipline measured in round 9; now the
-    * partitioned frame itself is session-lifetime, so steady-state
-    * serving pays only the iterations). */
-  private[graft] def coPurchaseUndByOther(t: Tables): org.apache.spark.sql.DataFrame =
-    Registries.frame(t.spark, t.dir, "copurchase_und_by_other") {
-      val pairs = coPurchasePairs(t).select(col("pa"), col("pb"))
-      pairs.select(col("pa").as("pk"), col("pb").as("other"))
-        .unionAll(pairs.select(col("pb").as("pk"), col("pa").as("other")))
-        .repartition(col("other"))
-    }
-
-  /** x157's serving layout: the WEIGHTED symmetric expansion
-    * (pk, other, w) pre-partitioned on `pk` (weighted PageRank joins
-    * rank and out-weight on the SOURCE key). Same once-per-session
-    * discipline as [[coPurchaseUndByOther]]. */
-  private[graft] def coPurchaseUndWByPk(t: Tables): org.apache.spark.sql.DataFrame =
-    Registries.frame(t.spark, t.dir, "copurchase_und_w_by_pk") {
-      val pairs = coPurchasePairs(t)
-      pairs.select(col("pa").as("pk"), col("pb").as("other"), col("w"))
-        .unionAll(pairs.select(col("pb").as("pk"), col("pa").as("other"), col("w")))
-        .repartition(col("pk"))
-    }
-
   /** The customer↔part BIPARTITE edge registry (x162's HITS graph):
     * one orders⋈lineitem join, DISTINCT-combined, built once per
     * session. Distinct frame, so the half-step SUMs read the same rows
@@ -4671,7 +4644,7 @@ object TrainingData {
 
   /** The registered IVF cell-count policy, k = max(16, ⌊√n⌋) — the
     * x146 form, now the DEFAULT for every IVF-backed registered query
-    * (x137/x138/x144/x153): SCALE.md's measured k-law (KScale, round
+    * (x137/x138/x144/x153): SCALE.md's measured k-law ("IVF k-scaling law", round
     * 9) shows fixed k=16 paying 6× in candidate work at sf1 with
     * exponent > 1.2, while k ∝ √n holds per-cell size ∝ √n and probe
     * work ∝ n^1.5/k = n. The corpus count is one cheap driver-side
@@ -4766,7 +4739,7 @@ object TrainingData {
     * cell count (per-query work ∝ corpus/k × nprobe = √n·nprobe at
     * k = ⌊√n⌋ instead of the full corpus — the 100 TB answer SCALE.md
     * promises for kNN clustering; fixed k=16 measured 6× dearer at sf1
-    * in the round-9 KScale table), then the SAME mutuality + guarded
+    * in SCALE.md's round-9 "IVF k-scaling law" table), then the SAME mutuality + guarded
     * connected-components tail as the exact baseline
     * ([[Dedup.mutualEdgesFromTopK]] makes the tail literally shared
     * code). Fully deterministic (seed centroids, id tiebreaks), so the
@@ -5183,8 +5156,8 @@ object TrainingData {
 
   /** x143 with multi-assignment (nassign=2): every vector is blocked
     * into its TWO nearest cells, so a near-dup pair is candidate
-    * whenever any of the 2×2 cell combinations coincide. KScale
-    * measured the trade at sf0.1: pair recall 0.20 → 0.53 at k=16
+    * whenever any of the 2×2 cell combinations coincide. SCALE.md
+    * "IVF k-scaling law" measured the trade at sf0.1: pair recall 0.20 → 0.53 at k=16
     * (0.15 → 0.35 at k=50) for ≤4× candidate work — the standard
     * recall lever when the corpus's near-dup pairs straddle cell
     * boundaries (borderline-threshold pairs on near-uniform vectors are
@@ -5220,8 +5193,8 @@ object TrainingData {
     * ([[Dedup.ivfAssignTwoLevel]]): coarse→fine centroid routing cuts
     * the flat n·k assignment term — the binding cost at SCALE.md's
     * measured k ∝ √n optimum — to n·(kc + k/kc). k=64/kc=8 here (the
-    * shape that fits every driver SF); the KScale-measured cost/recall
-    * vs flat assignment is in SCALE.md's round-9 table. Routing is
+    * shape that fits every driver SF); the measured cost/recall
+    * vs flat assignment is in SCALE.md's round-9 "IVF k-scaling law" table. Routing is
     * deterministic at both levels (seed centroids, id tiebreaks), so
     * the oracle replays the full coarse→fine route and the output is
     * hash-green. */
@@ -5544,7 +5517,7 @@ object TrainingData {
     * one float cast — so the refined book and the re-encode are
     * bit-reproducible and the full train→encode pipeline carries a
     * hash oracle; empty (code, subspace) cells keep their seed entry
-    * (both engines coalesce). PqLab's seed-vs-trained rows quantify
+    * (both engines coalesce). SCALE.md "Trained PQ codebooks" rows quantify
     * the recall this buys on clustered corpora (GenSf `--clustered`),
     * where the seed book is provably mis-centered. */
   /** Trained-codebook CTEs (oracle side), replicating
@@ -5745,8 +5718,8 @@ object TrainingData {
     * replayed float round-trip, so the five-stage pipeline is
     * bit-identical cross-engine. Scale shape is x153's ((n/k)·nprobe
     * CODE rows per query) with x155's one-off linear training cost in
-    * front; recall deltas vs the seed book are PqLab's measured table
-    * (SCALE.md round 10). */
+    * front; recall deltas vs the seed book are SCALE.md's measured table
+    * ("Trained PQ codebooks", round 10). */
   val x158 = Q(
     "x158_ivfpq_trained_topk",
     Some {
@@ -5988,8 +5961,8 @@ object TrainingData {
   }
 
   /** SQ8 shortlist → exact re-rank top-5 — registered in the SAME round
-    * whose lab measurement exposed the need: PqLab's SQ8 rows showed
-    * flat SQ8 at 0.72 recall where PQ+rerank reached 1.00 on
+    * whose lab measurement exposed the need: SCALE.md's SQ8 rows ("SQ8
+    * on the quantizer recall/time axes") showed flat SQ8 at 0.72 recall where PQ+rerank reached 1.00 on
     * distance-concentrated uniform vectors (SCALE.md), because the
     * rank-5/rank-6 margin falls below the decode rounding there. This
     * query is the named fix: the x160 decode-scan feeding a

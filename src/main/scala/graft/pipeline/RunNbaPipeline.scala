@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry for the NBA-parity pipeline (the reference DAG end-to-end):
   * `runMain graft.pipeline.RunNbaPipeline <bronzeJsonDir> <goldOutDir>`
   * Reads the seven bronze JSON files, builds silver + gold, writes gold
@@ -11,15 +9,7 @@ import org.apache.spark.sql.SparkSession
 object RunNbaPipeline {
   def main(args: Array[String]): Unit = {
     val Array(bronzeDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("nba-pipeline")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local(graft.Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     val pipe = NbaPipeline(spark, bronzeDir)
     pipe.writeGold(outDir)

@@ -48,7 +48,7 @@ object Pin {
     * measured on x152's serving registry: 3 full edge-frame Exchanges
     * per PageRank invocation (plans/r20/x152_before.txt,
     * `UnknownPartitioning(0)`), where the identical pin materialized
-    * with AQE off plans ZERO (BenchLab LAB_MODE=pinpart). Planning the
+    * with AQE off plans ZERO (plans/r20/x152_after.txt). Planning the
     * checkpoint classically makes the LogicalRDD carry the real
     * HashPartitioning + SortOrder, so keyed joins/aggregations on the
     * pinned key skip their Exchange/Sort outright (guide §2.4). AQE is

@@ -34,7 +34,7 @@ object IvfPqServeStream {
     * `trainIters > 0` fits the PQ codebook by that many per-subspace
     * Lloyd rounds ([[Dedup.pqCodebookLloyd]]) before encoding — on
     * clustered corpora one round cuts quantization distortion ~40% and
-    * lifts re-rank recall (PqLab round-10 table in SCALE.md); because
+    * lifts re-rank recall (SCALE.md "Trained PQ codebooks (round 10)"); because
     * the book is PERSISTED and every later encode (this one and any
     * [[PqStream]] ingest pointed at `indexDir/book`) runs against the
     * frozen trained frame, incremental ≡ batch is preserved exactly as
@@ -67,8 +67,8 @@ object IvfPqServeStream {
     *
     * The standing index is loaded and PINNED once here — per-batch
     * re-reads of the index parquet were the measured fixed cost of
-    * every micro-batch (ServeLab, round 10: footer reads + re-planning
-    * dominated small-batch latency). `cents`/`book` are broadcast-sized
+    * every micro-batch (SCALE.md "IVFADC serving, measured (round 10)":
+    * footer reads + re-planning dominated small-batch latency). `cents`/`book` are broadcast-sized
     * by construction; `codes` is the RAM-resident piece of the IVFADC
     * memory story (8 bytes/vector packed-equivalent — caching it IS the
     * design); `vectors` is touched only for `queries × shortlist` rows

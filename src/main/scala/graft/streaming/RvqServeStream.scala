@@ -19,7 +19,7 @@ import graft.operators.Dedup
   * the family — and the per-batch plan is a single registry scan with
   * two broadcasts (recon + the query batch), so it is the tier an
   * operator picks when index RAM is the binding constraint and the
-  * 8-bit additive code's recall (measured in PqSpec/PqLab, seed and
+  * 8-bit additive code's recall (measured in PqSpec and SCALE.md "Trained PQ codebooks", seed and
   * trained books both) is acceptable. `lloydIters` at build time picks
   * the seed (x184) or trained (x186) codebook rung; serving is
   * identical either way because the books are frozen into the

@@ -1,24 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.Exact._
 import graft.sources.Tables
 
 /** Limb sums must equal the decimal-cast sums bit-for-bit — they are the
   * codegen fast path for the same exact arithmetic, not an approximation. */
-class ExactSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("exact-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ExactSpec extends SparkSuite {
   lazy val li = Tables(spark, "/root/testdata/sf0.001").lineitem
 
   test("limb sums == decimal sums, grouped, incl. negative values") {

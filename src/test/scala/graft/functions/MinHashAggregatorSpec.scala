@@ -1,21 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** MinHash consistency + LSH recall over the real documents table. */
-class MinHashAggregatorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("minhash-agg-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MinHashAggregatorSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("typed Aggregator signature == the 8-min-aggregate signature (x03)") {

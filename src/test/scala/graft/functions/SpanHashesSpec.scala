@@ -1,8 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Pins the rolling-hash identity: `span_hashes(text, k)[i]` must be
   * BIT-IDENTICAL to `poly_hash(array_join(slice(split(text,' '), i+1,
@@ -12,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * formulation could get wrong: empty tokens (double spaces),
   * leading/trailing spaces, multi-byte codepoints, surrogate pairs,
   * n == k and n < k boundaries. */
-class SpanHashesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("span-hashes-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SpanHashesSpec extends SparkSuite {
   private def oldFormVsNew(texts: Seq[String], k: Int): Unit = {
     import spark.implicits._
     PolyHashFunctions.ensureRegistered(spark)

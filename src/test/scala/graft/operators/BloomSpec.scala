@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Bloom runtime-filter contract: no false negatives ever (every build
@@ -11,15 +10,7 @@ import graft.sources.Tables
   * joining probe row survives), and the pruned join is exactly the
   * plain join.
   */
-class BloomSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BloomSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("no false negatives: every build key passes mightContain") {

@@ -1,21 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** BPE tokenizer training (x176/x177): golden merges on the Sennrich
   * et al. 2016 example vocabulary, the greedy non-overlapping merge
   * rule, overlapping pair counting, and fertility accounting. */
-class BpeSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BpeSpec extends SparkSuite {
   import spark.implicits._
 
   // Sennrich et al. 2016 §3.2 example: {low:5, lower:2, newest:6, widest:3}

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Binary-quantization (1 bit/dim) mechanics and honesty pins.
@@ -17,15 +16,7 @@ import graft.sources.Tables
   * answer — the re-rank stage itself loses nothing; only shortlist
   * capture can.
   */
-class BqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bq-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BqSpec extends SparkSuite {
   lazy val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
 
   test("bqEncode: total 2-word packing, codes in [0, 2^32), bits replay the sign rule") {

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** The property content-defined chunking exists for, pinned on real
@@ -15,15 +14,7 @@ import graft.sources.Tables
   * across lightly-edited copies. Plus the structural laws: word
   * conservation and layout invariance (the oracle pins cross-engine
   * exactness of x194 itself). */
-class CdcSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cdc-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CdcSpec extends SparkSuite {
   lazy val docs = Tables(spark, "/root/testdata/sf0.01").documents
 
   private def chunkBag(df: org.apache.spark.sql.DataFrame): Map[(Long, String), Int] =

@@ -1,25 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Cross-operator consistency for the round-7 composition queries: the
   * composed plans must agree with the component operators they claim to
   * compose — a guard the per-query oracle cannot provide (it checks each
   * query against SQL, not queries against each other). */
-class CompositionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("composition-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CompositionSpec extends SparkSuite {
   private lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("x83 release set honors every component gate") {

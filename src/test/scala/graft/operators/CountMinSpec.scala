@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Count-Min guarantees behind x167: estimates never undercount (cells
@@ -11,15 +10,7 @@ import graft.sources.Tables
   * built per corpus partition combine by plain SUM into exactly the
   * whole-corpus cells, the property that makes the sketch a bounded
   * streaming/distributed summary. */
-class CountMinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("countmin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CountMinSpec extends SparkSuite {
   private def cells(df: org.apache.spark.sql.DataFrame) = {
     graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     df.select(explode(split(col("text"), " ")).as("w"))

@@ -1,11 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Semantics + plan shapes for the corpus-curation queries x40–x42
@@ -15,15 +15,7 @@ import graft.sources.Tables
   * (benchmark/vocab/category sides broadcast — the corpus side never
   * shuffles through a SortMergeJoin).
   */
-class CurationSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("curation-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CurationSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def run(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)

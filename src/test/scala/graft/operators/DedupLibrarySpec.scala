@@ -1,21 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Library-surface behaviors not covered by the oracle queries. */
-class DedupLibrarySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-lib-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupLibrarySpec extends SparkSuite {
   lazy val docs = Tables(spark, "/root/testdata/sf0.01").documents
 
   test("crossNearDup: paraphrase-level overlap reported with best bench match, clean doc silent") {

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** DSIR importance-weight pins. Hash correctness of x171 is the DuckDB
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * own target slice), totality (every document scored exactly once),
   * and the overflow envelope |score| ≤ 62·n_tokens.
   */
-class DsirSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsir-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DsirSpec extends SparkSuite {
   lazy val docs = Tables(spark, "/root/testdata/sf0.01").documents
 
   test("dsirScore: total, bounded, and target slice scores above the rest") {

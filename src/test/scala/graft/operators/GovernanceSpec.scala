@@ -1,10 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** Contracts for the governance/audit batch x131–x136 (temporal embargo
   * split, Pareto frontier, RFM segmentation, lang-ID confusion, rank
@@ -13,15 +13,7 @@ import graft.SparkEntry
   * the input, dominance completeness, probability-mass closure) and the
   * scale-relevant plan shapes.
   */
-class GovernanceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("governance-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GovernanceSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def run(name: String): DataFrame = SparkEntry.queries(name)(spark, sf)

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** IVF probe-search sanity: structure (cells, probe routing, top-k) plus
@@ -11,15 +10,7 @@ import graft.sources.Tables
   * are a worst case for coarse quantization, so the recall floor here is
   * deliberately modest — the spec pins mechanics, monotonicity in nprobe,
   * and exactness of within-cell scoring. */
-class IvfSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ivf-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IvfSpec extends SparkSuite {
   lazy val emb = Tables(spark, "/root/testdata/sf0.01").embeddings
 
   private def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** x195 layout-audit laws: both layouts partition the table (tile row
@@ -16,15 +15,7 @@ import graft.sources.Tables
   * and the file writer ([[graft.sources.Sinks.writeZOrdered]]): both
   * derive from the same grid + z_value, so per-tile membership under
   * the audit equals curve-range membership under the writer. */
-class LayoutSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("layout-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LayoutSpec extends SparkSuite {
   lazy val li = Tables(spark, "/root/testdata/sf0.01").lineitem
   lazy val audit =
     Layout.zorderAudit(li, "l_partkey", "l_suppkey").cache()

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** In-engine trainer laws (x197/x198/x201/x203/x204 — Learn.scala):
@@ -20,15 +19,7 @@ import graft.sources.Tables
   *  - both trainers' outputs are invariant to input partitioning
   *    (map-side-combined sums / broadcast updates only).
   */
-class LearnSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("learn-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LearnSpec extends SparkSuite {
   lazy val docs = Tables(spark, "/root/testdata/sf0.01").documents
 
   private val tokExpr = "length(text) - length(replace(text, ' ', '')) + 1"

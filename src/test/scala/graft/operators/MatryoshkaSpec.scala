@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** x196 matryoshka-recall laws, pinned against a LOCAL replay of the
@@ -12,15 +11,7 @@ import graft.sources.Tables
   * ground truth the DuckDB oracle also encodes — plus the fixture-level
   * reading the audit exists for: recall@10 grows with the serving
   * prefix (0.11 → 0.21 → 0.35 at d = 8/16/32 here). */
-class MatryoshkaSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("matryoshka-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MatryoshkaSpec extends SparkSuite {
   lazy val emb = Tables(spark, "/root/testdata/sf0.01").embeddings
 
   lazy val got =

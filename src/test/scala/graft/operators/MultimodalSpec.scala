@@ -1,19 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
+import graft.SparkSuite
 import graft.sources.Tables
 
-class MultimodalSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("multimodal-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MultimodalSpec extends SparkSuite {
   lazy val docs = Tables(spark, "/root/testdata/sf0.001").documents
 
   test("packMedia: binary content + typed metadata struct") {

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Structural laws of the x193 harmonic packing (the DuckDB oracle pins
   * cross-engine exactness; these pin the guarantees the law is FOR):
@@ -12,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * assignment is invariant under repartitioning (the window is
   * (source, class)-partitioned and fully ordered — no tie depends on
   * physical layout). */
-class PackingSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("packing-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PackingSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("harmonic packing: bin bound, class capacity, doc conservation, layout invariance") {

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** [[PortableBloom]] contract (the x145 decontamination gate): zero
@@ -11,15 +10,7 @@ import graft.sources.Tables
   * measured false-positive rate for the sized filter, and a filter
   * frame that stays broadcast-sized regardless of build-side count.
   */
-class PortableBloomSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("portable-bloom-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PortableBloomSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.01")
 
   private lazy val grams = Corpus.gramHashes(t.documents, "doc_id", "text")

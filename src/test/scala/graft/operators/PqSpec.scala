@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Product-quantization mechanics and honesty pins. Correctness of the
@@ -15,15 +14,7 @@ import graft.sources.Tables
   * (corpus codes never join corpus vectors — the only full-vector reads
   * are queries × shortlist).
   */
-class PqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PqSpec extends SparkSuite {
   lazy val emb = Tables(spark, "/root/testdata/sf0.01").embeddings
 
   private def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
@@ -151,7 +142,7 @@ class PqSpec extends AnyFunSuite {
 
     // ADC-only recall against the exact quantized metric: training must
     // not regress it (and on clustered corpora it is what lifts it —
-    // PqLab records the measured values)
+    // SCALE.md "Trained PQ codebooks" records the measured values)
     val pred = col("vec_id") >= 16 && col("vec_id") < 26
     val exact = topkSets(
       Dedup.pqQuantizedExactTopK(df, "vec_id", "embedding", pred, topK = 5))

@@ -1,23 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** The pruned top-k must equal the plain window form exactly, at any
   * partitioning, for every ordering direction. */
-class RanksSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ranks-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RanksSpec extends SparkSuite {
   private def windowForm(
       df: org.apache.spark.sql.DataFrame,
       keys: Seq[String], orders: Seq[(String, Boolean)], k: Int) = {

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Contracts of the shared-frame registry ([[Registries]]) and its two
   * registered frames:
@@ -16,15 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    cross-partitioning pin — done here via two sibling sessions with
   *    different shuffle.partitions).
   */
-class RegistriesSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("registries-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RegistriesSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   private def image(df: org.apache.spark.sql.DataFrame): Seq[String] = df
@@ -89,11 +80,12 @@ class RegistriesSpec extends AnyFunSuite {
     val s = spark.newSession()
     s.conf.set("spark.sql.shuffle.partitions", "4")
     val t = graft.sources.Tables(s, sf)
-    // derived-before-base, all four derived layouts
-    val byOther = TrainingData.coPurchaseUndByOther(t)
-    val byPk = TrainingData.coPurchaseUndWByPk(t)
+    // derived-before-base: the min-support cut and both partitioned
+    // PageRank serving layouts
     val min2 = TrainingData.coPurchasePairsMin2(t)
-    assert(byOther.count() > 0L && byPk.count() > 0L && min2.count() >= 0L)
+    val deg = TrainingData.coPurchaseUndDegByPk(t)
+    val wdeg = TrainingData.coPurchaseUndWdegByPk(t)
+    assert(deg.count() > 0L && wdeg.count() > 0L && min2.count() >= 0L)
     // the nested call memoized the base too: same instance afterwards
     val base = TrainingData.coPurchasePairs(t)
     assert(base eq TrainingData.coPurchasePairs(t))

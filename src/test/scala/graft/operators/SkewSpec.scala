@@ -1,22 +1,13 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Salting equivalence: the skew helpers must return exactly the unsalted
   * results (associative re-aggregation / replicated join). */
-class SkewSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("skew-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SkewSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("saltedSum == plain groupBy sum (counts and integer sums)") {

@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Scalar-quantization (SQ8) mechanics and honesty pins. Correctness of
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * strictly at or above PQ's ADC-only recall on the same corpus, with no
   * re-rank stage in the plan.
   */
-class SqSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sq-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SqSpec extends SparkSuite {
   lazy val emb = Tables(spark, "/root/testdata/sf0.01").embeddings
 
   private def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =

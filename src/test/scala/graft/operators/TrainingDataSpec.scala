@@ -2,10 +2,9 @@ package graft.operators
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** x189 contrastive-triplet mining on a SPARSE id space — the round-12
@@ -20,15 +19,7 @@ import graft.sources.Tables
   * negative on. The specs replay the rank law locally (plain sort) and
   * pin the full output set on both a gapped id space and a
   * snowflake-magnitude one. */
-class TrainingDataSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("trainingdata-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TrainingDataSpec extends SparkSuite {
   /** Runs x189 on `dir` and asserts it equals a local (plain-sort)
     * replay of the rank law: negId = rankToId((rank(anchor) · 48271)
     * mod n), then the same degenerate + margin filters with the cosine

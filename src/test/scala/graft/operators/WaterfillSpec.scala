@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** x202 water-filling laws on a SKEWED synthetic corpus (the real
   * documents fixture has near-uniform sources, so its run never
@@ -12,15 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * property), the total hits the budget EXACTLY, and the whole output
   * equals an independent greedy local replay of the textbook
   * algorithm. */
-class WaterfillSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("waterfill-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class WaterfillSpec extends SparkSuite {
   // skewed: tiny, small, mid, and two huge sources
   private val counts = Map(
     "tiny" -> 3L, "small" -> 40L, "mid" -> 500L,

@@ -1,24 +1,15 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** End-to-end parity tests: bronze JSON fixtures (tools/gen_nba_fixtures.py,
   * shapes per FIXTURES.md) → silver → six gold models, with hand-computed
   * expectations baked into the fixture design.
   */
-class NbaPipelineSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("nba-pipeline-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NbaPipelineSpec extends SparkSuite {
   lazy val pipe: NbaPipeline =
     NbaPipeline(spark, getClass.getResource("/nba").getPath)
 

@@ -1,25 +1,17 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
+
+import graft.SparkSuite
 
 /** Property tests for the tricky semantics called out in SURVEY.md §7.5:
   * gaps-and-islands streak detection, unpivot row-count invariants, and
   * last-wins dedup (Q-2) — each checked against an independent plain-Scala
   * reference implementation over seeded random inputs.
   */
-class SemanticsPropertySpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("semantics-property-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SemanticsPropertySpec extends SparkSuite {
   import scala.jdk.CollectionConverters._
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types._

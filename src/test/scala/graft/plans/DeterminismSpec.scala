@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** Partitioning-determinism pin: the engine's claim that every result
   * is bit-reproducible under ANY partitioning (exact decimal/limb sums,
@@ -24,16 +22,7 @@ import graft.SparkEntry
   * registry × 2-config sweep is the Verify oracle's job at the driver
   * level; this spec is the fast in-suite pin.
   */
-class DeterminismSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("determinism-spec")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DeterminismSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   private val names = Seq(
@@ -65,11 +54,8 @@ class DeterminismSpec extends AnyFunSuite {
     graft.functions.VectorExpressions.ensureRegistered(spark)
     val qs = SparkEntry.queries
     for (name <- names) {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
       val a = image(qs(name)(spark, sf))
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val b = image(qs(name)(spark, sf))
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
+      val b = withConf("spark.sql.shuffle.partitions" -> "7")(image(qs(name)(spark, sf)))
       assert(a === b, s"$name differs across shuffle partitionings")
       assert(a.nonEmpty, s"$name returned no rows at $sf")
     }

@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Per-model Spark JOB-COUNT floors for the six gold analogs —
   * BASELINE.md's bench-gate decomposition made concrete: at sf0.01 the
@@ -17,51 +18,30 @@ import org.scalatest.funsuite.AnyFunSuite
   * moves a count DOWN, update the pin and BASELINE.md's footnote
   * together; a count moving UP is the regression this spec exists to
   * catch. */
-class GoldJobFloorSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("gold-job-floor-spec")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // the exact bench-gate profile: single partition, AQE off (at
-    // sf0.01 AQE's per-query-stage materialization is one job of pure
-    // scheduler floor per exchange; classic execution runs each model
-    // as one multi-stage job plus its broadcast builds — see
-    // Bench.scala's small-pass methodology comment)
-    .config("spark.sql.shuffle.partitions", "1")
-    .config("spark.sql.adaptive.enabled", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GoldJobFloorSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
-  /** Jobs launched by one full materialization of the model (the same
-    * noop-sink action Bench times). A first throwaway run absorbs
-    * one-time work (codegen, file listing) so the count is the
-    * steady-state one the bench's min-of-N passes measure. */
-  private def jobsOf(name: String): Int = {
-    val fn = graft.SparkEntry.queries(name)
-    fn(spark, sf).write.format("noop").mode("overwrite").save() // warm
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      fn(spark, sf).write.format("noop").mode("overwrite").save()
-      // listener delivery is async; the bus has no public drain — a
-      // bounded poll is enough (job starts are enqueued before save()
-      // returns, the sleep only covers dispatch)
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1
-      while (System.nanoTime() < deadline && n.get() != last) {
-        last = n.get(); Thread.sleep(100)
-      }
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
+  // the exact bench-gate profile: single partition, AQE off (at sf0.01
+  // AQE's per-query-stage materialization is one job of pure scheduler
+  // floor per exchange; classic execution runs each model as one
+  // multi-stage job plus its broadcast builds — see Bench.scala's
+  // small-pass methodology comment)
+  private val benchConf =
+    Map("spark.sql.shuffle.partitions" -> "1", "spark.sql.adaptive.enabled" -> "false")
+  private var priorConf = Map.empty[String, String]
+
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
+    priorConf = benchConf.map { case (k, _) => k -> spark.conf.get(k) }
+    benchConf.foreach { case (k, v) => spark.conf.set(k, v) }
   }
+
+  override protected def afterAll(): Unit = {
+    priorConf.foreach { case (k, v) => spark.conf.set(k, v) }
+    super.afterAll()
+  }
+
+  private def jobsOf(name: String): Int = GoldJobFloorSpec.jobsOf(spark, sf, name)
 
   // the pinned floors — BASELINE.md "Per-model job-count floors";
   // the single source of truth lives in main scope (GoldAnalogs) so
@@ -97,17 +77,44 @@ class GoldJobFloorSpec extends AnyFunSuite {
     graft.operators.GoldAnalogs.all.map(_.name).foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val benchProfile = image(fn(spark, sf)) // this session IS the bench profile
-      spark.conf.set("spark.sql.shuffle.partitions", "32")
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      try {
-        val clusterProfile = image(fn(spark, sf))
-        assert(benchProfile === clusterProfile,
-          s"$name differs between the bench and cluster profiles")
-        assert(benchProfile.nonEmpty, s"$name returned no rows at $sf")
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", "1")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val clusterProfile = withConf(
+          "spark.sql.shuffle.partitions" -> "32", "spark.sql.adaptive.enabled" -> "true") {
+        image(fn(spark, sf))
       }
+      assert(benchProfile === clusterProfile,
+        s"$name differs between the bench and cluster profiles")
+      assert(benchProfile.nonEmpty, s"$name returned no rows at $sf")
     }
+  }
+}
+
+object GoldJobFloorSpec {
+
+  /** Jobs launched by one full materialization of query `name` (the
+    * same noop-sink action Bench times). A first throwaway run absorbs
+    * one-time work (codegen, file listing) so the count is the
+    * steady-state one the bench's min-of-N passes measure. Shared by
+    * both job-floor specs. */
+  def jobsOf(spark: SparkSession, sf: String, name: String): Int = {
+    val fn = graft.SparkEntry.queries(name)
+    fn(spark, sf).write.format("noop").mode("overwrite").save() // warm
+    val n = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      fn(spark, sf).write.format("noop").mode("overwrite").save()
+      // listener delivery is async; the bus has no public drain — a
+      // bounded poll is enough (job starts are enqueued before save()
+      // returns, the sleep only covers dispatch)
+      val deadline = System.nanoTime() + 5_000_000_000L
+      var last = -1
+      while (System.nanoTime() < deadline && n.get() != last) {
+        last = n.get(); Thread.sleep(100)
+      }
+      n.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

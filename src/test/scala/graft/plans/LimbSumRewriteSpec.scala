@@ -1,29 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** The limb-sum optimizer rule must change the plan (no decimal Sum
   * accumulator remains) without changing any result bit. */
-class LimbSumRewriteSpec extends AnyFunSuite {
-
-  // The full suite shares one SparkSession across specs, so
-  // spark.sql.extensions (a create-time config) may not apply here;
-  // inject the rule dynamically instead — same rule object the
-  // GraftExtensions path registers (Verify/Bench run that path).
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("limb-rewrite-spec")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    if (!s.experimental.extraOptimizations.contains(LimbSumRewrite))
-      s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ LimbSumRewrite
-    s
-  }
+class LimbSumRewriteSpec extends SparkSuite {
 
   private val sql =
     "SELECT l_returnflag, l_linestatus, " +
@@ -31,10 +12,8 @@ class LimbSumRewriteSpec extends AnyFunSuite {
       "CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) AS sum_price " +
       "FROM li GROUP BY l_returnflag, l_linestatus"
 
-  private def withFlag[A](on: Boolean)(f: => A): A = {
-    spark.conf.set("spark.graft.limbSumRewrite", on.toString)
-    try f finally spark.conf.set("spark.graft.limbSumRewrite", "true")
-  }
+  private def withFlag[A](on: Boolean)(f: => A): A =
+    withConf("spark.graft.limbSumRewrite" -> on.toString)(f)
 
   test("rewrites decimal sums to limb sums, results bit-identical") {
     graft.sources.Tables(spark, "/root/testdata/sf0.001").lineitem

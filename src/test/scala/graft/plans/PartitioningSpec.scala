@@ -2,26 +2,17 @@ package graft.plans
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Storage-layout levers from SCALE.md, demonstrated and pinned:
   * partition pruning on partitioned parquet and shuffle-free co-located
   * joins on bucketed tables.
   */
-class PartitioningSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("partitioning-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PartitioningSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("partitioned write + partition pruning at the scan") {
@@ -48,9 +39,7 @@ class PartitioningSpec extends AnyFunSuite {
       .bucketBy(4, "c_custkey").sortBy("c_custkey")
       .option("path", s"$dir/customer_b").format("parquet")
       .saveAsTable("buckets.customer_b")
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("buckets.orders_b")
         .join(spark.table("buckets.customer_b"),
           col("o_custkey") === col("c_custkey"))
@@ -61,24 +50,19 @@ class PartitioningSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange hashpartitioning"), plan)
       assert(joined.count() ===
         t.orders.join(t.customer, col("o_custkey") === col("c_custkey")).count())
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
   }
 
   test("AQE splits a skewed join partition at runtime (skew=true in the final plan)") {
     import spark.implicits._
-    val confs = Map(
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "16KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // one key owns ~95% of the left side — the classic hot key
       val left = spark.range(0, 200000)
         .select(when($"id" % 20 =!= 0, lit(7L)).otherwise($"id" % 100).as("k"),
@@ -91,11 +75,6 @@ class PartitioningSpec extends AnyFunSuite {
       val finalPlan = joined.queryExecution.executedPlan.toString
       assert(finalPlan.contains("skew=true"),
         s"AQE should have split the hot partition:\n$finalPlan")
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 
@@ -121,20 +100,17 @@ class PartitioningSpec extends AnyFunSuite {
     def pairs(df: org.apache.spark.sql.DataFrame) = df
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
 
-    val confs = Map(
+    val expected = pairs(graft.operators.Dedup
+      .ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.5))
+    assert(expected.size === 10, s"fixture should yield the 10 crafted pairs: $expected")
+    withConf(
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    val expected = pairs(graft.operators.Dedup
-      .ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.5))
-    assert(expected.size === 10, s"fixture should yield the 10 crafted pairs: $expected")
-    try {
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val skewed = graft.operators.Dedup
         .ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.5)
       val got = pairs(skewed)
@@ -143,11 +119,6 @@ class PartitioningSpec extends AnyFunSuite {
         s"AQE should have split the hot shingle bucket:\n$finalPlan")
       assert(got === expected, "skew split must not change the pair set")
       assert(got.nonEmpty)
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 
@@ -156,12 +127,8 @@ class PartitioningSpec extends AnyFunSuite {
     t.lineitem.select(col("l_orderkey"), col("l_quantity"))
       .write.mode("overwrite").parquet(dir)
     // pushdown is a DataSource-V2 feature: drop parquet from the V1 list
-    val pconfs = Seq("spark.sql.parquet.aggregatePushdown",
-      "spark.sql.sources.useV1SourceList")
-    val prev = pconfs.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.parquet.aggregatePushdown", "true")
-      spark.conf.set("spark.sql.sources.useV1SourceList", "")
+    withConf("spark.sql.parquet.aggregatePushdown" -> "true",
+        "spark.sql.sources.useV1SourceList" -> "") {
       val agg = spark.read.parquet(dir)
         .agg(count(lit(1)).as("n"), min("l_orderkey").as("lo"), max("l_orderkey").as("hi"))
       val plan = agg.queryExecution.executedPlan.toString
@@ -171,11 +138,6 @@ class PartitioningSpec extends AnyFunSuite {
       val row = agg.head()
       assert(row.getLong(0) === t.lineitem.count())
       assert(row.getLong(1) === t.lineitem.agg(min("l_orderkey")).head().getLong(0))
-    } finally {
-      prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
     }
   }
 }

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
+import graft.SparkSuite
 import graft.operators.TrainingData
 import graft.sources.Tables
 
@@ -13,15 +11,7 @@ import graft.sources.Tables
   * g05's shared base (gold chain), a graph fixed-point (PageRank), and
   * BPE training — plus `reliable` exercised end-to-end on a temp
   * checkpoint dir, and the invalid-value error path. */
-class PinSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pin-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PinSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def rows(name: String): Seq[String] = {
@@ -29,10 +19,8 @@ class PinSpec extends AnyFunSuite {
     fn(spark, sf).collect().map(_.toString).sorted.toSeq
   }
 
-  private def withPin[A](mode: String)(body: => A): A = {
-    spark.conf.set("spark.graft.pin", mode)
-    try body finally spark.conf.set("spark.graft.pin", "local")
-  }
+  private def withPin[A](mode: String)(body: => A): A =
+    withConf("spark.graft.pin" -> mode)(body)
 
   test("eager posture is bit-identical to local on g05, PageRank, BPE train") {
     for (name <- Seq("g05_streaks_one_row", "x152_copurchase_pagerank",
@@ -64,9 +52,10 @@ class PinSpec extends AnyFunSuite {
     // pins per call (mutual-edge + CC materializations), so it
     // exercises the reliable path end-to-end on every run.
     val dir = java.nio.file.Files.createTempDirectory("graft-pin").toString
-    spark.conf.set("spark.graft.checkpointDir", dir)
     val base = rows("x59_semantic_clusters")
-    val reliable = withPin("reliable")(rows("x59_semantic_clusters"))
+    val reliable = withConf("spark.graft.checkpointDir" -> dir) {
+      withPin("reliable")(rows("x59_semantic_clusters"))
+    }
     assert(reliable === base)
     // the reliable pin actually wrote checkpoint state
     def anyFiles(d: java.io.File): Boolean = {

@@ -1,10 +1,10 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.ExplainMode
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** Plan-shape assertions (SURVEY.md §7.3): the point of the declarative
   * formulation is that Catalyst does the physical work — these tests pin
@@ -12,15 +12,7 @@ import graft.SparkEntry
   * pushdown into the parquet scan, column pruning, and top-k via
   * TakeOrderedAndProject instead of a global sort.
   */
-class PlanSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def plan(name: String): String = {

@@ -1,10 +1,9 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 
 /** Mechanical plan hygiene over EVERY registered query — the sweep form
   * of PlanSpec's per-query pins, so a future query can't reintroduce a
@@ -20,16 +19,7 @@ import graft.SparkEntry
   * Whitelists are justified inline; every entry is a bounded frame by
   * construction (grid-, query-, or output-sized — never corpus-sized).
   */
-class PlanSweepSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("plan-sweep-spec")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PlanSweepSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   /** Queries allowed an unpartitioned logical Window, each over a frame

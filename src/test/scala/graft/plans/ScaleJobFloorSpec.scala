@@ -1,10 +1,6 @@
 package graft.plans
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSuite
 
 /** Job-count floors for the five most expensive sf0.1 queries
   * (BENCH_LOCAL's top of table: the x152/x157/x156 graph family, the
@@ -17,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * the bench table two rounds later.
   *
   * Unlike the gold six (pinned under the bench micro-suite profile),
-  * these pin under the CLUSTER profile — AQE on, default parallelism,
-  * broadcasts on — because that is the profile the sf0.1 full pass
-  * (the artifact these queries are graded from) runs. AQE makes a job
+  * these pin under the CLUSTER profile — the [[SparkSuite]] one: AQE
+  * on, partitions = cores, broadcasts on — because that is the profile
+  * the sf0.1 full pass (the artifact these queries are graded from)
+  * runs. AQE makes a job
   * of every query-stage materialization, so the counts are higher and
   * tighter-coupled to exchange layout: exactly the sensitivity wanted.
   * Counts are data-size-free (iteration counts and exchange counts,
@@ -27,61 +24,26 @@ import org.scalatest.funsuite.AnyFunSuite
   * plan change moves a count DOWN, update the pin and the BASELINE.md
   * footnote together; UP is the regression this spec exists to catch.
   */
-class ScaleJobFloorSpec extends AnyFunSuite
-    with org.scalatest.BeforeAndAfterAll {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("scale-job-floor-spec")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    // the cluster profile of the sf0.1 full pass (Bench's default path)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class ScaleJobFloorSpec extends SparkSuite {
 
   /** The registry frames ([[graft.operators.Registries]]) are memoized
     * per session, and under sbt's shared-JVM test run another suite may
-    * have built them FIRST under a different profile (measured: after
-    * GoldJobFloorSpec leaves its AQE-off bench profile, DeterminismSpec
-    * builds the sf0.01 co-purchase registry under it, and x165's
-    * downstream AQE plan over that differently-laid-out pinned frame
-    * materializes 35 stage jobs instead of 15). The floors pin the
+    * have built them FIRST inside a temporarily different profile
+    * (DeterminismSpec runs queries at 7 partitions; measured: an sf0.01
+    * co-purchase registry built under the AQE-off bench profile made
+    * x165's downstream AQE plan over that differently-laid-out pinned
+    * frame materialize 35 stage jobs instead of 15). The floors pin the
     * DRIVER's condition — registries built in Bench's own cluster
     * profile — so this suite drops any cross-suite entries and lets its
-    * own warm runs rebuild them under the profile above. Also resets
-    * the two conf knobs in case an earlier suite's profile leaked. */
-  override def beforeAll(): Unit = {
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    * own warm runs rebuild them under the [[SparkSuite]] profile. */
+  override protected def beforeAll(): Unit = {
+    super.beforeAll()
     graft.operators.Registries.clear()
   }
 
   private val sf = "/root/testdata/sf0.01"
 
-  /** Jobs launched by one full materialization (the same noop-sink
-    * action Bench times), after a throwaway warm run — the
-    * [[GoldJobFloorSpec.jobsOf]] law. */
-  private def jobsOf(name: String): Int = {
-    val fn = graft.SparkEntry.queries(name)
-    fn(spark, sf).write.format("noop").mode("overwrite").save() // warm
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      fn(spark, sf).write.format("noop").mode("overwrite").save()
-      val deadline = System.nanoTime() + 5_000_000_000L
-      var last = -1
-      while (System.nanoTime() < deadline && n.get() != last) {
-        last = n.get(); Thread.sleep(100)
-      }
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsOf(name: String): Int = GoldJobFloorSpec.jobsOf(spark, sf, name)
 
   // the pinned floors — BASELINE.md "sf0.1 job-count floors" footnote.
   // x152 reads 24 in an isolated session and 25 under the full suite's

@@ -7,23 +7,15 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Contract of the Bloom-filter sink: the named columns carry a Bloom
   * filter in every row group of every written file (verified through
   * the parquet footer API, not just write options), unnamed columns and
   * plain writes carry none, and reads back are byte-identical. */
-class BloomFilterSinkSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-sink-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BloomFilterSinkSpec extends SparkSuite {
   private def bloomOffsets(dir: String, column: String): Seq[Long] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new HPath(dir).getFileSystem(conf)

@@ -2,24 +2,16 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Contract of the small-files compaction pass: rows and the partition
   * column survive byte-identically, the file count collapses to one per
   * partition directory, and the layout stays compatible with the
   * streaming writers' per-batch overwrite (idempotent replay works the
   * same after compaction as before). */
-class CompactionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("compaction-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CompactionSpec extends SparkSuite {
   private def canon(df: org.apache.spark.sql.DataFrame) = df
     .select("batch_id", "k", "v").collect()
     .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet

@@ -2,10 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.{HilbertValue, ZValue}
 
 /** Hilbert layout contract: the index is a bijection on the grid whose
@@ -13,15 +12,7 @@ import graft.functions.{HilbertValue, ZValue}
   * lacks — pinned comparatively), and writing a fact table
   * Hilbert-ordered shrinks the per-file span of BOTH keys vs naive,
   * exactly as the Z-order twin does. */
-class HilbertSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("hilbert-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HilbertSpec extends SparkSuite {
   /** Reference inverse (d2xy) of the order-16 curve, test-side only. */
   private def d2xy(dIn: Long): (Long, Long) = {
     var x = 0L; var y = 0L; var t = dIn

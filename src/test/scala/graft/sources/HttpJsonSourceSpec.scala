@@ -4,9 +4,8 @@ import java.net.InetSocketAddress
 import java.util.concurrent.atomic.AtomicInteger
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.pipeline.NbaPipeline
 
 /** S4 retrying-ingest contract against a local stub server: the
@@ -14,15 +13,7 @@ import graft.pipeline.NbaPipeline
   * endpoint succeeds on attempt 3, exhaustion throws, and a pipeline
   * whose games table arrives over HTTP is row-identical to the
   * fixture-fed pipeline. */
-class HttpJsonSourceSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("http-json-source-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class HttpJsonSourceSpec extends SparkSuite {
   private def withServer(paths: Map[String, HttpExchange => Unit])(
       body: Int => Unit): Unit = {
     val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)

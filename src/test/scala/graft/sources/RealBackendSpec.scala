@@ -1,8 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Opt-in smokes against REAL backing services — the environment-gap
   * closers for S8/S9 (object store) and S10b (Postgres staging), which
@@ -29,15 +29,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * the point: a green run here proves the production wiring with zero
   * code changes.
   */
-class RealBackendSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("real-backend-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RealBackendSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("all-VARCHAR silver staging round-trips through a real Postgres (S10b)") {

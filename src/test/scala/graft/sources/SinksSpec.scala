@@ -2,19 +2,11 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class SinksSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sinks-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SinksSpec extends SparkSuite {
   lazy val t = Tables(spark, "/root/testdata/sf0.001")
 
   test("JSON round-trip preserves rows and values (S8/S9)") {

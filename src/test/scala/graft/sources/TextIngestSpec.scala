@@ -2,19 +2,11 @@ package graft.sources
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
-class TextIngestSpec extends AnyFunSuite {
+import graft.SparkSuite
 
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("text-ingest-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TextIngestSpec extends SparkSuite {
   test("batch ingestion: content-addressed rows with provenance, blanks dropped") {
     val dir = Files.createTempDirectory("txt-ingest").toString
     Files.writeString(Paths.get(s"$dir/a.txt"),

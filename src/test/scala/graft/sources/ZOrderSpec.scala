@@ -2,10 +2,9 @@ package graft.sources
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.functions.ZValue
 
 /** Z-order layout contract: the Morton interleave is a correct bit
@@ -13,15 +12,7 @@ import graft.functions.ZValue
   * the per-file span of BOTH keys vs a naive layout — the property that
   * makes parquet min/max stats prune files for predicates on either
   * column. */
-class ZOrderSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("zorder-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ZOrderSpec extends SparkSuite {
   test("interleave: round-trip bits, monotone in each dimension locally") {
     assert(ZValue.interleave(0L, 0L) === 0L)
     assert(ZValue.interleave(1L, 0L) === 1L)

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Analytics
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * fixed reference equal the batch x84 scores on the same rows
   * (bit-identical — the stats frame is the same exact limb aggregation),
   * and the alert side table is exactly the |z| > 3 subset. */
-class AnomalyStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("anomaly-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AnomalyStreamSpec extends SparkSuite {
   test("stream scores == batch scores; alerts are the |z|>3 subset") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -2,25 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Multi-batch contract of the streaming blocklist gate: kept set
   * equals batch x180's kept set over any batching (verdicts are
   * within-document against a static list), and metrics account for
   * every document and every match exactly once. */
-class BlocklistStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("blocklist-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BlocklistStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
   private val phrases =
     Seq("slow scan", "fast table", "big vector", "key agg row",

@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Multi-batch contract of the streaming Bloom gate: the union of
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * batch x145 report over the whole corpus — INCLUDING the filter's
   * deterministic false positives, which depend only on the bits fixed
   * at build time, never on batch boundaries. */
-class BloomStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bloom-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BloomStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("stream reports across 3 batches == batch x145 on the same corpus") {

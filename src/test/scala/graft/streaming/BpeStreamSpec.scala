@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * corpus regardless of batching (merge application is per-word
   * deterministic once the table is fixed), novel words segment via the
   * merges rather than vanishing, and metrics account for every doc. */
-class BpeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bpe-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BpeStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("stream fertility across 3 shuffled batches == batch x177; metrics account for all") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * under the same thresholds over any batching — including arrivals
   * whose values sit outside the seed range, where the total sign rule
   * just takes the corresponding branch (no clamp case exists). */
-class BqStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("bq-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class BqStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("streamed words across 3 batches == batch bqEncode under frozen seed thresholds") {

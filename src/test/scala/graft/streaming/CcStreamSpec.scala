@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 
 /** Incremental-CC contract (CcStream): after every micro-batch the
@@ -19,15 +18,7 @@ import graft.operators.Dedup
   * prefix equality per batch, singleton survival (a self-pair's
   * one-node cluster persists across later batches), replay idempotence,
   * and the keep-list law (node == cluster_root). */
-class CcStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("cc-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CcStreamSpec extends SparkSuite {
   private def mapOf(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
     df.select("node", "cluster_root").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * of per-batch rewrites over id-ordered batches equals the batch
   * operator (x62) on the whole corpus, and the standing chunk store
   * holds each distinct chunk hash exactly once. */
-class ChunkStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("chunk-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ChunkStreamSpec extends SparkSuite {
   test("stream chunk rewrite over id-ordered batches == batch chunkDedupRewrite") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

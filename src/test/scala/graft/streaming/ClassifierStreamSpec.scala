@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * (the score is stateless across documents), only kept docs land with
   * their scores, and the per-batch metrics rows reconstruct the full
   * keep/drop accounting without rescanning the documents. */
-class ClassifierStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("classifier-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ClassifierStreamSpec extends SparkSuite {
   test("stream classifier == batch classifier; metrics reconstruct the accounting") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

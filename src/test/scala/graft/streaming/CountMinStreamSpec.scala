@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -15,15 +14,7 @@ import graft.sources.Tables
   * — the mergeability that defines the sketch. Plus the estimate
   * contract on the merged sketch: never an undercount, for every word.
   */
-class CountMinStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("countmin-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CountMinStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("merged per-batch partials == one-shot batch sketch; estimates never undercount") {

@@ -2,26 +2,17 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Multi-batch contract of the streaming decontamination gate: the union
   * of per-batch verdicts over a train corpus arriving in pieces equals
   * the batch x119 audit over the whole corpus — ingest-time and
   * audit-time decisions can never diverge. */
-class DecontaminationStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("decontamination-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DecontaminationStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("stream verdicts across 3 batches == batch x119 on the same corpus") {

@@ -2,25 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 
 /** Multi-batch contract of the streaming incremental-dedup loop: per-batch
   * verdicts equal the batch operator (x44) on the same data, uniques are
   * admitted to the standing corpus, and later batches are judged against
   * the grown corpus. */
-class DedupStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dedup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupStreamSpec extends SparkSuite {
   test("stream verdicts == batch incrementalDedup per micro-batch; corpus grows") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

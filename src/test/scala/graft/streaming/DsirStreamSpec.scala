@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * whole corpus regardless of batching (the score is within-document
   * once the table is fixed), and the metrics rows account for every
   * scored document exactly once. */
-class DsirStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("dsir-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DsirStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("stream kept docs across 3 batches == batch dsirApply; metrics account for all") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -17,15 +16,7 @@ import graft.sources.Tables
   * matter for the pair inventory (every pair meets exactly once: across
   * batches through the registry, within a batch through the self-join);
   * batches here arrive in vec_id order as the realistic ingest shape. */
-class EmbeddingDedupStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("embedding-dedup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class EmbeddingDedupStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("stream pair union across 3 batches == batch x143; registry = corpus cells") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -18,15 +17,7 @@ import graft.sources.Tables
   * the training means and scores with the shared LogitText expression.
   * Unseen sources yield NULL verdicts (ungated), never a wrong-model
   * score. */
-class GroupedLogitServeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("grouped-logit-serve-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GroupedLogitServeStreamSpec extends SparkSuite {
   private val tokExpr = "length(text) - length(replace(text, ' ', '')) + 1"
   private val theExpr =
     "(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ' '))) / 4"

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -19,15 +18,7 @@ import graft.sources.Tables
   * over its own prefix, and a replayed batch leaves the table
   * unchanged. Sources absent from later batches keep their rows (their
   * cells stand in the partials). */
-class GroupedLogitStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("grouped-logit-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GroupedLogitStreamSpec extends SparkSuite {
   private val tokExpr = "length(text) - length(replace(text, ' ', '')) + 1"
   private val theExpr =
     "(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ' '))) / 4"

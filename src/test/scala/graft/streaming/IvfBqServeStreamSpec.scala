@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * query set arriving in pieces, served against the standing index,
   * equal the batch answer path over the same frames. The mandatory
   * re-rank contract is also pinned: shortlist = 0 must be refused. */
-class IvfBqServeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ivfbq-serve-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IvfBqServeStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("streamed query batches == batch answers; rerank-free mode refused") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * query set arriving in pieces, served against the standing index,
   * equal batch ivfPqSearch over the same corpus and parameters —
   * answers depend only on the query vector and the frozen index. */
-class IvfPqServeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("ivfpq-serve-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class IvfPqServeStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("streamed query batches == batch x153 on the same index") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -18,15 +17,7 @@ import graft.sources.Tables
   * and a replayed batch (overwrite into its own partition) leaves the
   * fit unchanged. Also pins histogram-form ≡ row-form agreement (x208
   * vs x207 betas to double tolerance, confusion exactly). */
-class LogitStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("logit-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class LogitStreamSpec extends SparkSuite {
   private val tokExpr = "length(text) - length(replace(text, ' ', '')) + 1"
   private val theExpr =
     "(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ' '))) / 4"

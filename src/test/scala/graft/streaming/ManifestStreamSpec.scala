@@ -2,23 +2,13 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
+import graft.SparkSuite
 import graft.operators.Corpus
 
 /** Streaming manifest contract: per-batch shard-manifest partials merge
   * into EXACTLY the one-shot batch manifest — counts add, id ranges
   * combine, and the XOR checksum folds associatively across batches. */
-class ManifestStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("manifest-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ManifestStreamSpec extends SparkSuite {
   private def asMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => r.getLong(0) ->
       ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toMap

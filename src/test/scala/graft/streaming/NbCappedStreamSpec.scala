@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -17,15 +16,7 @@ import graft.sources.Tables
   * cap is applied post-merge, so batch boundaries cannot move a single
   * weight. Plus: the interim refit equals the batch fit over its own
   * prefix, and the model stays K·classes-bounded at every refit. */
-class NbCappedStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("nb-capped-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NbCappedStreamSpec extends SparkSuite {
   private val K = 64
 
   private def image(df: org.apache.spark.sql.DataFrame): Seq[String] = df

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * the same documents (exact decimal scoring — no float drift between
   * the paths), only pred-positive docs land, and the metrics rows
   * reconstruct the keep/drop accounting. */
-class NbServeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("nb-serve-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NbServeStreamSpec extends SparkSuite {
   test("stream verdicts == batch verdicts against the same frozen model") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * per-batch verdicts over id-ordered batches equals the batch operator
   * (x55) on the whole corpus, and the standing gram store grows only by
   * novel grams. */
-class NoveltyStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("novelty-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NoveltyStreamSpec extends SparkSuite {
   test("stream novelty over id-ordered batches == batch ngramNovelty; store grows by novel grams only") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

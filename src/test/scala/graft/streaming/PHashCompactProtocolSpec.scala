@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Crash-window replay of [[RegistryCompaction.compact]]'s three-step
   * protocol (fold to hidden tmp with `_SUCCESS` → delete subsumed →
@@ -21,15 +22,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    fold from the remaining partitions would silently drop them
   *    (the exact loss mode the `_SUCCESS` check exists to prevent).
   */
-class PHashCompactProtocolSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("phash-compact-protocol-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PHashCompactProtocolSpec extends SparkSuite {
   private def regDf(rows: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
     rows.toDF("doc_id", "phash")

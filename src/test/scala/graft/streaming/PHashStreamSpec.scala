@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Multimodal
 import graft.sources.Tables
 
@@ -17,15 +16,7 @@ import graft.sources.Tables
   * order): every pair meets exactly once regardless of arrival order —
   * across batches through the registry, within a batch through the
   * id-ordered self-join. */
-class PHashStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("phash-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PHashStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("stream pair union across shuffled batches == batch perceptualNearDups") {

@@ -2,25 +2,16 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 
 /** Streaming PII scrub contract: scrubbed output over micro-batches
   * equals the batch [[Corpus.piiScan]] on the same documents (the scan
   * is stateless), the sink never carries a surviving match, and the
   * per-batch metrics reconstruct the full scrub audit. */
-class PiiStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pii-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PiiStreamSpec extends SparkSuite {
   private val pats = Seq(
     "email" -> "[a-z0-9]+@[a-z]+\\.[a-z]+",
     "phone" -> "\\d{3}-\\d{4}")

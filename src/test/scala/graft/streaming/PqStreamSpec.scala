@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * per-batch code frames over a corpus arriving in pieces equals batch
   * [[Dedup.pqCodes]] over the whole corpus — codes are per-vector facts
   * under the frozen codebook, independent of batch boundaries. */
-class PqStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("pq-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PqStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("stream codes across 3 batches == batch pqCodes on the same corpus") {

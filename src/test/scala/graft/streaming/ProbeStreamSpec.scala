@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Learn
 import graft.sources.Tables
 
@@ -17,15 +16,7 @@ import graft.sources.Tables
   * holds exactly one row per batch (the no-rescan cost model), interim
   * fits equal the batch probe over their own prefix, and a REPLAYED
   * batch (overwrite into its own partition) leaves the fit unchanged. */
-class ProbeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("probe-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ProbeStreamSpec extends SparkSuite {
   private val tokExpr = "length(text) - length(replace(text, ' ', '')) + 1"
   private val theExpr =
     "(length(' ' || text || ' ') - length(replace(' ' || text || ' ', ' the ', ' '))) / 4"

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * equal the batch x65 gate on the same documents (the gate is stateless
   * across documents), only kept docs land, and the per-batch metrics
   * rows reconstruct the full drop audit. */
-class QualityStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("quality-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class QualityStreamSpec extends SparkSuite {
   test("stream gate == batch gate; metrics reconstruct the drop audit") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -2,11 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -24,15 +23,7 @@ import graft.sources.Tables
   * and off over the same five batches. PHashStream's own spec covers
   * the pair-generation shape; PHashCompactProtocolSpec replays the
   * crash windows of the shared protocol directly. */
-class RegistryCompactionStreamsSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("registry-compaction-streams-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RegistryCompactionStreamsSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   private def partitionNames(reg: String): Set[String] =

@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 import graft.streaming.RetentionStream.REv
 
@@ -11,16 +10,7 @@ import graft.streaming.RetentionStream.REv
   * feed reproduces the batch x76 cohort triangle exactly — including
   * users whose activity spans batches (cohort day fixed by their first
   * batch) and days re-delivered in later batches (emitted once). */
-class RetentionStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("retention-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RetentionStreamSpec extends SparkSuite {
   private def batchTriangle(evs: Seq[REv]): Map[(String, Long), Long] = {
     import spark.implicits._
     val active = evs.toDF()
@@ -39,7 +29,6 @@ class RetentionStreamSpec extends AnyFunSuite {
   test("3-batch stream cohort feed == batch x76 triangle") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val evs = Tables(spark, "/root/testdata/sf0.001").events

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -15,15 +14,7 @@ import graft.sources.Tables
   * that answer path with `excludeSelf = true` IS oracle-green batch
   * x185 (pinned here directly, so stream ≡ x185 modulo the documented
   * external-id contract). */
-class RvqServeStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("rvq-serve-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class RvqServeStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("streamed query batches == batch answers; answer path == batch x185") {

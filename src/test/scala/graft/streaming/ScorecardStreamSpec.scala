@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * EXACTLY the one-shot batch scorecard (associative long + decimal
   * sums survive the parquet round-trip bit-for-bit), and unseen words
   * score under count-1 smoothing instead of dropping. */
-class ScorecardStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("scorecard-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class ScorecardStreamSpec extends SparkSuite {
   test("merged stream partials == one-shot batch scorecard, bit-identical") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

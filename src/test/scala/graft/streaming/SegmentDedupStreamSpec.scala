@@ -2,26 +2,17 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkEntry
+import graft.SparkSuite
 import graft.sources.Tables
 
 /** Multi-batch contract of the streaming segment-dedup gate: with docs
   * arriving in doc_id order, summing per-batch stats per source equals
   * the batch x139 report, and the registry ends with exactly the batch
   * winners — ingest-time and audit-time dedup can never diverge. */
-class SegmentDedupStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("segment-dedup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SegmentDedupStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("stream stats across 3 ordered batches == batch x139; registry = winners") {

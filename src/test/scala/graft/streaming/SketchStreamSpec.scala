@@ -2,24 +2,15 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Corpus
 
 /** Streaming sketch contract: per-batch histogram partials merge into
   * EXACTLY the one-shot batch sketch, and quantile estimates off the
   * merged sketch equal the batch estimates. */
-class SketchStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sketch-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SketchStreamSpec extends SparkSuite {
   test("merged stream partials == one-shot batch sketch; quantiles agree") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -13,15 +12,7 @@ import graft.sources.Tables
   * adversarially shuffled multi-batch delivery, the registry's
   * compaction equals the batch winner rule, and re-rewriting the whole
   * corpus against it replays batch x175 token-for-token. */
-class SpanDedupStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("span-dedup-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SpanDedupStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("shuffled delivery: converged winners replay batch x175 exactly") {

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.operators.Dedup
 import graft.sources.Tables
 
@@ -14,15 +13,7 @@ import graft.sources.Tables
   * [[Dedup.sqEncode]] over the whole corpus under the same frozen
   * bounds, and an arrival OUTSIDE the seed bounds saturates to the grid
   * edges instead of wrapping. */
-class SqStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("sq-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SqStreamSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.01"
 
   test("stream codes across 3 batches == batch sqEncode; out-of-range saturates") {

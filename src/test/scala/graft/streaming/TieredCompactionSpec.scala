@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Laws of [[RegistryCompaction.maybeCompactTiered]] — the geometric
   * fold the sf1 measurement forced (flat every-N folds rewrite the
@@ -27,15 +28,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    all compaction off produces bit-identical outputs with a bounded
   *    registry directory count.
   */
-class TieredCompactionSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("tiered-compaction-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TieredCompactionSpec extends SparkSuite {
   private val ddl = "doc_id BIGINT, phash BIGINT, batch_id BIGINT"
 
   private def regDf(rows: Seq[(Long, Long)]): DataFrame = {

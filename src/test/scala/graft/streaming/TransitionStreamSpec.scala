@@ -1,10 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SparkSuite
 import graft.sources.Tables
 import graft.streaming.TransitionStream.TEv
 
@@ -13,15 +12,7 @@ import graft.streaming.TransitionStream.TEv
   * 3-micro-batch stream over the same in-order events emits the identical
   * transition multiset — including the pairs that straddle batch
   * boundaries, which only the keyed LastEv state can produce. */
-class TransitionStreamSpec extends AnyFunSuite {
-
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("transition-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class TransitionStreamSpec extends SparkSuite {
   private def fixture() = {
     import spark.implicits._
     Tables(spark, "/root/testdata/sf0.001").events
@@ -44,7 +35,6 @@ class TransitionStreamSpec extends AnyFunSuite {
   }
 
   test("batch transitions == lag-window form") {
-    implicit val s: SparkSession = spark
     import spark.implicits._
     val evs = fixture().collect().toSeq
     val got = TransitionStream.transitions(fixture())
@@ -56,7 +46,6 @@ class TransitionStreamSpec extends AnyFunSuite {
   test("3-batch stream == batch, including cross-batch pairs") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
-    implicit val s: SparkSession = spark
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     // in-order delivery: one global (ts, event_id) order, split in thirds

@@ -3,24 +3,15 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
+
+import graft.SparkSuite
 
 /** Streaming WAU contract: once-only (user, day) emission makes the
   * per-batch fanout counts associative, so the merged stream series
   * equals batch x122 on the union — including under re-delivery of
   * days already counted. */
-class WauStreamSpec extends AnyFunSuite {
-
-  implicit lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("wau-stream-spec")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class WauStreamSpec extends SparkSuite {
   private def ts(day: Int, hour: Int): Timestamp =
     new Timestamp(day * 86400000L + hour * 3600000L)
 
