@@ -3,9 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every registered query on
-  * SPARK_GRAFT_SF_DIR, prints ONE JSON line. Per BASELINE.md, a warmup
-  * pass runs first (JVM/codegen/page-cache), then each query is timed
-  * twice and the per-query minimum reported — a shared host's transient
+  * SPARK_GRAFT_SF_DIR at `local[SPARK_GRAFT_CPUS]`, prints ONE JSON line.
+  * The contract sets SPARK_GRAFT_CPUS on every run: unset, it falls to
+  * the [[Sessions.cpus]] default of 4, while every recorded artifact
+  * (BENCH_LOCAL.json, BENCH_r*.json) ran at local[32].
+  *
+  * Per BASELINE.md, a warmup pass runs first (JVM/codegen/page-cache),
+  * then each query is timed twice and the per-query minimum reported — a shared host's transient
   * contention shows up as one-sided positive noise, and min-of-2 is the
   * standard estimator for the query's true cost. Results are forced
   * through a noop sink so every column is fully materialized (a bare

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Plan inspector: `runMain graft.Explain <queryName> [sfDir] [mode]`.
+/** Plan inspector:
+  * `SPARK_GRAFT_CPUS=8 runMain graft.Explain <queryName> [sfDir] [mode]`.
   * Prints the Catalyst plan (formatted mode by default) plus a parquet
   * scan count — the fast check that a query reads the fact table the
   * expected number of times and that filters/pruning reached the scan.

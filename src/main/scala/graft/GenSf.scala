@@ -30,7 +30,7 @@ import org.apache.spark.sql.functions._
   * All perturbations are pure column arithmetic (xxhash64-seeded) —
   * bit-reproducible on any partitioning, no RNG state anywhere.
   *
-  * Usage: `runMain graft.GenSf <baseDir> <outDir> <factor> [--clustered]`
+  * Usage: `SPARK_GRAFT_CPUS=8 runMain graft.GenSf <baseDir> <outDir> <factor> [--clustered]`
   * (the flag regenerates `embeddings.embedding` as a 32-cluster mixture
   * — the realistic-corpus twin of the default near-uniform vectors).
   * Do not point queries' CORRECTNESS runs here — this directory is for

@@ -6,11 +6,10 @@ import org.apache.spark.sql.SparkSession
   *  - `local[cores]` with `spark.sql.shuffle.partitions = cores`;
   *  - [[GraftExtensions]] (native functions + `LimbSumRewrite`), so the
   *    plan `Explain` prints is the plan `Verify` and `Bench` run;
-  *  - AQE on, session timezone UTC, UI off;
-  *  - `spark.sql.legacy.parquet.nanosAsLong` on: `Tables.events` needs
-  *    it for the TIMESTAMP(NANOS) shipping of `events.ts` and sets it on
-  *    first touch; deciding it here keeps the session conf fixed for the
-  *    session's lifetime (no other testdata file carries nanos).
+  *  - AQE on, session timezone UTC, UI off.
+  *
+  * Per-read decode confs are not part of the profile: `Tables.events`
+  * owns `spark.sql.legacy.parquet.nanosAsLong` and sets it on first read.
   *
   * `getOrCreate` semantics: in a JVM that already has a session (the
   * forked test JVM), the runtime confs above are re-applied to it and
@@ -19,7 +18,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Sessions {
 
-  /** `SPARK_GRAFT_CPUS`, the core count every main runs at (default 4). */
+  /** `SPARK_GRAFT_CPUS`, the core count every main runs at (default 4).
+    * Set it on every invocation: the recorded `Bench` artifacts ran at 32
+    * and the recorded `Explain` plans at 8. */
   def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
 
   def local(cores: Int): SparkSession = SparkSession.builder()
@@ -29,7 +30,6 @@ object Sessions {
     .config("spark.sql.shuffle.partitions", cores.toString)
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 }

@@ -3,7 +3,7 @@ package graft
 import graft.sources.Tables
 
 /** Ad-hoc SQL entry point:
-  * `runMain graft.Sql "<query>" [sfDir]`
+  * `SPARK_GRAFT_CPUS=8 runMain graft.Sql "<query>" [sfDir]`
   * Registers the testdata tables as views plus the engine's native
   * functions (float_vec_dot, poly_hash) and runs the query — the
   * "switch your SQL client to this engine" surface (pair with
