@@ -26,8 +26,8 @@ import org.apache.spark.sql.SparkSession
   *     reported as `sched_floor_p50` — the tenancy context every other
   *     number in the artifact should be read against;
   *   - the full JSON is ALSO written to SPARK_GRAFT_BENCH_OUT (default
-  *     ./BENCH_LOCAL_c<cpus>.json, plus a ./BENCH_LOCAL.json copy for
-  *     fixed-name readers) so a truncated stdout capture can't lose it
+  *     ./BENCH_LOCAL_c<cpus>.json plus a ./BENCH_LOCAL.json copy for
+  *     fixed-name readers, no copy if set) so stdout truncation can't lose it
   *     and two different-core-count runs can't overwrite each other;
   *     both JSON lines echo `cpus` and the effective `master` so every
   *     artifact's provenance is checkable from its content;
@@ -50,16 +50,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val smallDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.01")
     val cpus = Sessions.cpus
-    // Per-run out-file (round-19 verdict item 2): the 8-core and 32-core
-    // driver invocations used to write the SAME default file, so the
-    // later parse of the earlier run read whichever invocation finished
-    // last — the r19 core-scaling artifact was a byte-identical stale
-    // read. The default name now carries the core count, and the JSON
-    // itself echoes `cpus`/`master`, so a scaling pair is always two
-    // distinct files whose provenance is checkable from the content.
-    // An explicit SPARK_GRAFT_BENCH_OUT still wins; the legacy
-    // BENCH_LOCAL.json is ALSO written for any fixed-name reader.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_LOCAL_c$cpus.json")
+    // Out-files as in the scaladoc: the default name carries the core
+    // count (round-19 verdict item 2); an explicit one gets no copy.
+    val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+    val outFile = explicitOut.getOrElse(s"BENCH_LOCAL_c$cpus.json")
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -289,7 +283,7 @@ object Bench {
       s"""{"metric":"total","value":${totalOf(results)},"unit":"sec","cpus":$cpus,"master":"local[$cpus]","queries":${toJson(results)},"gc_ms":$gcJson,"old_gen_mb":$oldGenJson,"sf":"$sfDir","sched_floor_p50":$schedFloorP50,$failedJson$smallJson}"""
     try {
       java.nio.file.Files.writeString(java.nio.file.Paths.get(outFile), line + "\n")
-      if (outFile != "BENCH_LOCAL.json")
+      if (explicitOut.isEmpty)
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get("BENCH_LOCAL.json"), line + "\n")
     } catch { case e: Throwable => System.err.println(s"[bench] file write failed: ${e.getMessage}") }

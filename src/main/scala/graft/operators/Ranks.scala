@@ -24,9 +24,10 @@ import org.apache.spark.sql.types._
   * `WindowGroupLimit` spans on both sides of the exchange.
   *
   * [[topKPerGroupHeap]] keeps the explicit mapPartitions heap — the
-  * same algorithm, selectable via GRAFT_TOPK_HEAP=1 for A/B runs and as
-  * the documented fallback for engines without the rewrite. Both forms
-  * are bit-identical because the mandatory tiebreak columns make each
+  * same algorithm, called directly on the all-pairs candidate frames
+  * (Dedup's `annTopK` and `matryoshkaRecall`, where it measured faster)
+  * and the fallback for engines without the rewrite. Both forms are
+  * bit-identical because the mandatory tiebreak columns make each
   * group's ordering total.
   */
 object Ranks {
@@ -82,28 +83,23 @@ object Ranks {
       k: Int
   ): DataFrame = {
     require(k > 0, "k must be positive")
-    if (sys.env.get("GRAFT_TOPK_HEAP").contains("1"))
-      topKPerGroupHeap(df, keyCols, orderCols, k)
-    else {
-      val w = Window
-        .partitionBy(keyCols.map(col): _*)
-        .orderBy(orderCols.map { case (c, asc) =>
-          if (asc) col(c).asc else col(c).desc }: _*)
-      // collision-free temp name: an input that already carries "__rn"
-      // must survive untouched (the heap variant preserves arbitrary
-      // schemas; this path must too)
-      val rn = Iterator.iterate("__rn")(_ + "_")
-        .dropWhile(df.columns.contains).next()
-      df.withColumn(rn, row_number().over(w))
-        .filter(col(rn) <= k)
-        .drop(rn)
-    }
+    val w = Window
+      .partitionBy(keyCols.map(col): _*)
+      .orderBy(orderCols.map { case (c, asc) =>
+        if (asc) col(c).asc else col(c).desc }: _*)
+    // collision-free temp name: an input that already carries "__rn"
+    // must survive untouched (the heap variant preserves arbitrary
+    // schemas; this path must too)
+    val rn = Iterator.iterate("__rn")(_ + "_")
+      .dropWhile(df.columns.contains).next()
+    df.withColumn(rn, row_number().over(w))
+      .filter(col(rn) <= k)
+      .drop(rn)
   }
 
   /** The hand-rolled form of the partial prune: a bounded per-key heap
-    * in mapPartitions ahead of the exact window. Kept for A/B
-    * measurement (GRAFT_TOPK_HEAP=1) and as the fallback shape for
-    * Spark builds without WindowGroupLimit. */
+    * in mapPartitions ahead of the exact window, for Dedup's all-pairs
+    * frames and for Spark builds without WindowGroupLimit. */
   def topKPerGroupHeap(
       df: DataFrame,
       keyCols: Seq[String],

@@ -173,14 +173,6 @@ object GoldModels {
   // ---- streaks_and_rivals.sql -----------------------------------------
 
   def streaksAndRivals(games: DataFrame): DataFrame = {
-    // Materialize the one-team base eagerly: the two fused aggregation
-    // passes below would otherwise each re-expand the scan subtree (see
-    // GoldAnalogs g05 note). localCheckpoint (not cache) so the blocks are reclaimed by
-    // the ContextCleaner once the frame is unreachable — a session-held
-    // cache entry would leak in a long-lived service. Cluster caveat:
-    // checkpoint blocks are non-replicated and lineage is truncated, so
-    // an executor loss fails the job instead of recomputing; switch to
-    // cache() + explicit unpersist where executor loss matters.
     val spursGames = games
       .filter(col("team_abbreviation") === "SAS")
       .select(
@@ -191,7 +183,6 @@ object GoldModels {
         when(col("wl") === "W", 1).otherwise(0).as("is_win"),
         when(col("wl") === "L", 1).otherwise(0).as("is_loss")
       )
-      .transform(graft.plans.Pin.pin)
     // W1: gaps-and-islands — running sum over game_date (ISO strings order
     // correctly). Unpartitioned, as in the reference; the scale-out variant
     // partitions by season/team first (SURVEY.md §7.4). One window pass

@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -320,31 +321,22 @@ object Sinks {
       // the salvage pass protects; CompactionSpec injects a concurrent
       // micro-batch here deterministically instead of racing threads
       onBeforeSwap: () => Unit = () => ()): (Long, Long) = {
-    import org.apache.spark.sql.functions.col
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverCompaction(spark, path)
-    def dataFiles(p: org.apache.hadoop.fs.Path): Long = {
+    def dataFiles(p: Path): Long = {
       val it = fs.listFiles(p, true)
       var n = 0L
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_") &&
-          !f.getPath.getName.startsWith(".")) n += 1
-      }
+      while (it.hasNext) if (visible(it.next().getPath.getName)) n += 1
       n
     }
-    def topDirs(p: org.apache.hadoop.fs.Path): Set[String] =
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-        .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
     val before = dataFiles(root)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".__compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + ".__compact_old")
+    val tmp = new Path(path + ".__compact_tmp")
+    val old = new Path(path + ".__compact_old")
     fs.delete(tmp, true)
     // snapshot the partition-directory set the compaction read covers;
     // anything beyond this set at swap time arrived concurrently
-    val snapshot = topDirs(root)
+    val snapshot = topDirs(fs, root)
     spark.read.parquet(path)
       .repartition(partitionCols.map(col): _*)
       .write.mode("overwrite")
@@ -352,16 +344,9 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .parquet(tmp.toString)
     onBeforeSwap()
-    fs.delete(old, true)
-    require(fs.rename(root, old), s"compaction swap failed: $root -> $old")
-    // crash here: root is gone but old is intact -> recoverCompaction
-    require(fs.rename(tmp, root), s"compaction swap failed: $tmp -> $root")
+    swapIn(fs, tmp, root, old)
     // salvage micro-batch directories that landed after the read
-    (topDirs(old) -- snapshot).foreach { d =>
-      require(fs.rename(new org.apache.hadoop.fs.Path(old, d),
-        new org.apache.hadoop.fs.Path(root, d)),
-        s"compaction salvage failed: $old/$d -> $root/$d")
-    }
+    salvage(fs, old, root, topDirs(fs, old) -- snapshot)
     // delete the old generation ONLY once the new root is verified
     require(fs.exists(root) && fs.listStatus(root).nonEmpty,
       s"compaction verification failed: $root missing or empty; " +
@@ -378,23 +363,54 @@ object Sinks {
     * a completed-but-unconfirmed swap and is simply cleaned up after
     * salvaging any unmerged late partition directories. */
   def recoverCompaction(spark: SparkSession, path: String): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    val old = new org.apache.hadoop.fs.Path(path + ".__compact_old")
-    if (!fs.exists(old)) return
-    if (!fs.exists(root)) {
-      require(fs.rename(old, root), s"compaction recovery failed: $old -> $root")
-    } else {
-      def topDirs(p: org.apache.hadoop.fs.Path): Set[String] =
-        fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName)
-          .filterNot(n => n.startsWith("_") || n.startsWith(".")).toSet
-      (topDirs(old) -- topDirs(root)).foreach { d =>
-        require(fs.rename(new org.apache.hadoop.fs.Path(old, d),
-          new org.apache.hadoop.fs.Path(root, d)),
-          s"compaction recovery salvage failed: $old/$d -> $root/$d")
-      }
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val old = new Path(path + ".__compact_old")
+    restoreOld(fs, root, old)
+    if (fs.exists(old)) {
+      salvage(fs, old, root, topDirs(fs, old) -- topDirs(fs, root))
       fs.delete(old, true)
     }
   }
+
+  /** Full-refresh parquet write as dbt's `__dbt_tmp`/`__dbt_backup`
+    * rename swap (SURVEY S11): `df` lands at `<path>.__tmp`, and only a
+    * complete write replaces `path`, so a failed write leaves the
+    * previous files readable. A crash between the two renames is undone
+    * on the next call's entry. Atomic on HDFS/POSIX, not object stores. */
+  def writeSwapped(df: DataFrame, path: String): Unit = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val (tmp, old) = (new Path(path + ".__tmp"), new Path(path + ".__backup"))
+    restoreOld(fs, root, old)
+    df.write.mode("overwrite").parquet(tmp.toString)
+    swapIn(fs, tmp, root, old)
+    fs.delete(old, true)
+  }
+
+  /** The two renames of a generation swap: `root` (if any) moves to
+    * `old`, then `tmp` becomes `root`; see [[restoreOld]] for a crash. */
+  private def swapIn(fs: FileSystem, tmp: Path, root: Path, old: Path): Unit = {
+    fs.delete(old, true)
+    if (fs.exists(root)) require(fs.rename(root, old), s"swap failed: $root -> $old")
+    require(fs.rename(tmp, root), s"swap failed: $tmp -> $root")
+  }
+
+  /** Undoes a crash between [[swapIn]]'s renames: `root` missing and
+    * `old` present moves `old` back. An `old` left next to a healthy
+    * `root` is a finished swap whose cleanup did not run. */
+  private def restoreOld(fs: FileSystem, root: Path, old: Path): Unit =
+    if (fs.exists(old) && !fs.exists(root))
+      require(fs.rename(old, root), s"swap recovery failed: $old -> $root")
+
+  private def visible(name: String): Boolean = !name.startsWith("_") && !name.startsWith(".")
+
+  private def topDirs(fs: FileSystem, p: Path): Set[String] =
+    fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).filter(visible).toSet
+
+  private def salvage(fs: FileSystem, from: Path, to: Path, dirs: Set[String]): Unit =
+    dirs.foreach { d =>
+      require(fs.rename(new Path(from, d), new Path(to, d)),
+        s"compaction salvage failed: $from/$d -> $to/$d")
+    }
 }

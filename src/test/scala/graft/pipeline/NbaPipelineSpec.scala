@@ -1,9 +1,15 @@
 package graft.pipeline
 
+import java.nio.file.Files
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.SparkSuite
+import graft.plans.GoldJobFloorSpec
+import graft.sources.Sinks
 
 /** End-to-end parity tests: bronze JSON fixtures (tools/gen_nba_fixtures.py,
   * shapes per FIXTURES.md) → silver → six gold models, with hand-computed
@@ -123,6 +129,53 @@ class NbaPipelineSpec extends SparkSuite {
 
   test("dbt schema assertions: all 12 green") {
     assert(pipe.assertGold() === Seq.empty)
+  }
+
+  test("dbt schema assertions: failure strings, one per violating column") {
+    import spark.implicits._
+    val gold = pipe.gold ++ Map(
+      "summary_by_season" -> Seq(("2023-24", Some(1)), ("2024-25", None))
+        .toDF("season", "team_ranking"),
+      "home_vs_away" -> Seq("Home", "Away", "Neutral", null).toDF("location"))
+    assert(Assertions.runAll(gold) === Seq(
+      "summary_by_season.team_ranking: 1 null rows",
+      "home_vs_away.location: 1 rows outside List(Home, Away)"))
+  }
+
+  test("built layers: writeGold and assertGold read the pinned gold") {
+    assert(pipe.gold.size === 6) // forces silver and gold: both pin on first access
+    val out = Files.createTempDirectory("gold").toString
+    // one write job per gold table; one aggregate (AQE: map + result
+    // stage) per checked table — no job re-derives a layer from JSON
+    val writeJobs = GoldJobFloorSpec.jobsOf(spark)(pipe.writeGold(out))
+    val assertJobs = GoldJobFloorSpec.jobsOf(spark)(pipe.assertGold())
+    info(s"writeGold jobs=$writeJobs assertGold jobs=$assertJobs")
+    assert(writeJobs <= 6, s"writeGold launched $writeJobs jobs")
+    assert(assertJobs <= 10, s"assertGold launched $assertJobs jobs")
+  }
+
+  test("a gold write that fails mid-way leaves the previous gold readable") {
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.mkString("|")).sorted.toSeq
+    val base = Files.createTempDirectory("warehouse").toString
+    pipe.saveAsTables(base)
+    val path = s"$base/gold/summary_by_season"
+    val before = rows(spark.read.parquet(path))
+    assert(before.size === 8)
+    // two of four write tasks throw: the job aborts after others ran
+    val failing = pipe.gold("summary_by_season").repartition(4)
+      .withColumn("season", when(spark_partition_id() >= 2,
+        raise_error(lit("injected write failure"))).otherwise(col("season")))
+    def failedWriteKeepsGold(): Unit = {
+      intercept[Exception](Sinks.writeSwapped(failing, path))
+      assert(rows(spark.read.parquet(path)) === before)
+      assert(rows(spark.table("gold.summary_by_season")) === before)
+    }
+    failedWriteKeepsGold()
+    // a crash between the swap's two renames: gold sits at the backup
+    // and the next write restores it before writing
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.rename(new Path(path), new Path(path + ".__backup")))
+    failedWriteKeepsGold()
   }
 
   test("dbt unique / relationships semantics") {

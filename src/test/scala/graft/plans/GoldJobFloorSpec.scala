@@ -98,6 +98,11 @@ object GoldJobFloorSpec {
   def jobsOf(spark: SparkSession, sf: String, name: String): Int = {
     val fn = graft.SparkEntry.queries(name)
     fn(spark, sf).write.format("noop").mode("overwrite").save() // warm
+    jobsOf(spark)(fn(spark, sf).write.format("noop").mode("overwrite").save())
+  }
+
+  /** Jobs launched while `action` runs. */
+  def jobsOf(spark: SparkSession)(action: => Unit): Int = {
     val n = new AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit =
@@ -105,10 +110,10 @@ object GoldJobFloorSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      fn(spark, sf).write.format("noop").mode("overwrite").save()
+      action
       // listener delivery is async; the bus has no public drain — a
-      // bounded poll is enough (job starts are enqueued before save()
-      // returns, the sleep only covers dispatch)
+      // bounded poll is enough (job starts are enqueued before the
+      // action returns, the sleep only covers dispatch)
       val deadline = System.nanoTime() + 5_000_000_000L
       var last = -1
       while (System.nanoTime() < deadline && n.get() != last) {
