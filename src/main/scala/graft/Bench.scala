@@ -54,6 +54,14 @@ object Bench {
     // count (round-19 verdict item 2); an explicit one gets no copy.
     val explicitOut = sys.env.get("SPARK_GRAFT_BENCH_OUT")
     val outFile = explicitOut.getOrElse(s"BENCH_LOCAL_c$cpus.json")
+    // Pass overrides, parsed once for both timed passes (see `bench`):
+    // a typo'd count must fail loudly, not silently measure with the
+    // pass's default.
+    val passesOverride = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map { s =>
+      s.toIntOption.filter(_ >= 1).getOrElse(sys.error(
+        s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$s'"))
+    }
+    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -106,15 +114,7 @@ object Bench {
       * per-query stderr line makes long runs observable. */
     def bench(qs: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
         dir: String, defaultPasses: Int = 2): Seq[(String, Timing)] = {
-      val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES") match {
-        case None => defaultPasses
-        case Some(s) => s.toIntOption match {
-          case Some(n) if n >= 1 => n
-          case _ => sys.error(
-            s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$s'")
-        }
-      }
-      val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
+      val passes = passesOverride.getOrElse(defaultPasses)
       if (warmup) qs.foreach { case (_, fn) => runOnce(fn, dir) }
       def timedPass(): Seq[(String, Timing)] = qs.map { case (name, fn) =>
         val g0 = jvmGcMs()
@@ -201,17 +201,7 @@ object Bench {
     def benchPerQuery(
         qsIn: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
         dir: String, defaultPasses: Int): Seq[(String, Double)] = {
-      // same strict parse as bench(): a typo'd override must fail loudly,
-      // not silently measure with the default
-      val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES") match {
-        case None => defaultPasses
-        case Some(s) => s.toIntOption match {
-          case Some(n) if n >= 1 => n
-          case _ => sys.error(
-            s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$s'")
-        }
-      }
-      val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
+      val passes = passesOverride.getOrElse(defaultPasses)
       qsIn.map { case (name, fn) =>
         if (warmup) runOnce(fn, dir)
         val best = (1 to passes).map { _ =>

@@ -592,18 +592,9 @@ object GoldAnalogs {
     // p_brand) is elided because p_partkey is assumed UNIQUE (the TPC-H
     // primary key) — the standard key-constraint rewrite, saving a full
     // shuffle of the dimension ahead of the stats join. A non-keyed
-    // `part` input would duplicate pool rows; GRAFT_CHECK_KEYS=1 turns
-    // the assumption into a hard check (one extra aggregate job, debug
-    // only — the oracle hash gate re-verifies the equivalence on every
-    // round's data regardless).
-    val parts = t.part.select("p_partkey", "p_name", "p_brand")
-    if (sys.env.get("GRAFT_CHECK_KEYS").contains("1")) {
-      val dup = parts.groupBy("p_partkey").count()
-        .filter(col("count") > 1).limit(1).count()
-      require(dup == 0L,
-        "g06 elides DISTINCT assuming p_partkey is unique; input violates it")
-    }
-    val pool = parts
+    // `part` input would duplicate pool rows; the oracle hash gate
+    // re-verifies the equivalence on every round's data.
+    val pool = t.part.select("p_partkey", "p_name", "p_brand")
       .join(perPart, col("p_partkey") === col("l_partkey"))
       .select(
         Seq(

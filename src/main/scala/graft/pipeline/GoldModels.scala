@@ -78,8 +78,9 @@ object GoldModels {
 
   // ---- team_weaknesses_unpivoted.sql ----------------------------------
 
-  /** (label, silver column, lower-is-better) in the SQL's UNION order. */
-  private val weaknessMetrics: Seq[(String, String, Boolean)] = Seq(
+  /** (label, silver column, lower-is-better) in the SQL's UNION order —
+    * the byte-exact labels GoldModelsSql also reads. */
+  private[pipeline] val weaknessMetrics: Seq[(String, String, Boolean)] = Seq(
     ("Porcentaje de tiro de campo", "fg_pct", false),
     ("Porcentaje de tres", "fg3_pct", false),
     ("Pérdidas de balón", "tov", true),
@@ -146,15 +147,7 @@ object GoldModels {
   // ---- spurs_player_contributions_unpivoted.sql -----------------------
 
   def spursPlayerContributionsUnpivoted(playerStats: DataFrame): DataFrame = {
-    val contribMetrics = Seq(
-      ("Porcentaje de tiro de campo", "fg_pct"),
-      ("Porcentaje de tres", "fg3_pct"),
-      ("Pérdidas de balón", "tov"),
-      ("Rebotes", "reb"),
-      ("Robos", "stl"),
-      ("Bloqueos", "blk"),
-      ("Diferencial Puntos", "plus_minus")
-    )
+    val contribMetrics = weaknessMetrics.map { case (label, c, _) => (label, c) }
     val src = playerStats
       .filter(col("team_abbreviation") === "SAS")
       .groupBy(col("player_id"), col("player_name"), col("team_abbreviation"))
@@ -254,8 +247,9 @@ object GoldModels {
   // ---- players_recommendations.sql ------------------------------------
 
   /** branch spec: (weakness label, avg column, rank ascending?, positions
-    * (empty = no filter), reason literal) — sql:54-147, byte-exact. */
-  private val recBranches = Seq(
+    * (empty = no filter), reason literal) — sql:54-147, byte-exact;
+    * GoldModelsSql reads it too. */
+  private[pipeline] val recBranches = Seq(
     ("Porcentaje de tiro de campo", "avg_fg_pct", false, Seq("G", "F"),
       "Contratar un tirador de élite para mejorar la eficiencia del tiro."),
     ("Porcentaje de tres", "avg_fg3_pct", false, Seq("G", "G-F", "F"),

@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import GoldModels.{recBranches, weaknessMetrics}
+
 /** The six gold models as ANSI SQL text over the `silver.`/`gold.`
   * catalog databases ([[NbaPipeline.saveAsTables]]) — the E3 serving
   * surface: what a BI client (the reference serves Superset over its
@@ -49,17 +51,6 @@ object GoldModelsSql {
        |       SUM(CASE WHEN wl = 'L' THEN 1 ELSE 0 END) AS losses,
        |       ROUND(${avg6("pts")}, 2) AS avg_points
        |FROM base GROUP BY season, team_name, location""".stripMargin
-
-  /** (label, column, lower-is-better) — GoldModels.weaknessMetrics order. */
-  private val weaknessMetrics: Seq[(String, String, Boolean)] = Seq(
-    ("Porcentaje de tiro de campo", "fg_pct", false),
-    ("Porcentaje de tres", "fg3_pct", false),
-    ("Pérdidas de balón", "tov", true),
-    ("Rebotes", "reb", false),
-    ("Robos", "stl", false),
-    ("Bloqueos", "blk", false),
-    ("Diferencial Puntos", "plus_minus", false)
-  )
 
   val teamWeaknessesUnpivoted: String = {
     def avgs(prefix: String) =
@@ -158,38 +149,19 @@ object GoldModelsSql {
        |SELECT * FROM bws CROSS JOIN wls CROSS JOIN bw CROSS JOIN bl""".stripMargin
   }
 
-  /** (label, stat, ascending-rank?, positions, reason) —
-    * GoldModels.recBranches, byte-exact labels/reasons. */
-  private val recBranches = Seq(
-    ("Porcentaje de tiro de campo", "fg_pct", false, Seq("G", "F"),
-      "Contratar un tirador de élite para mejorar la eficiencia del tiro."),
-    ("Porcentaje de tres", "fg3_pct", false, Seq("G", "G-F", "F"),
-      "Contratar un tirador de élite para abrir el campo."),
-    ("Rebotes", "reb", false, Seq("F", "F-C", "C"),
-      "Adquirir un rebotador consistente para controlar los tableros."),
-    ("Pérdidas de balón", "tov", true, Seq("G"),
-      "Incorporar un base que reduzca las pérdidas de balón."),
-    ("Robos", "stl", false, Seq("G", "F"),
-      "Firmar un defensor perimetral para mejorar la defensa en el robo de balones."),
-    ("Bloqueos", "blk", false, Seq("F-C", "C"),
-      "Contratar un defensor interior para proteger el aro y aumentar los bloqueos."),
-    ("Diferencial Puntos", "plus_minus", false, Seq.empty,
-      "Contratar a un jugador con impacto positivo en el diferencial de puntos.")
-  )
-
   val playersRecommendations: String = {
     val statCols = Seq("fg_pct", "fg3_pct", "reb", "tov", "stl", "blk", "plus_minus")
     val pgsAvgs = statCols.map(c => s"${avg6(c)} AS avg_$c").mkString(", ")
-    val rankCols = recBranches.map { case (_, c, asc, _, _) =>
-      s"ROW_NUMBER() OVER (ORDER BY avg_$c ${if (asc) "ASC" else "DESC"}) AS rank_avg_$c"
+    val rankCols = recBranches.map { case (_, avgCol, asc, _, _) =>
+      s"ROW_NUMBER() OVER (ORDER BY $avgCol ${if (asc) "ASC" else "DESC"}) AS rank_$avgCol"
     }.mkString(", ")
-    val branches = recBranches.map { case (label, c, _, positions, reason) =>
+    val branches = recBranches.map { case (label, avgCol, _, positions, reason) =>
       val posPred =
         if (positions.isEmpty) ""
         else s" AND position IN (${positions.map(p => s"'$p'").mkString(", ")})"
       s"""SELECT '$label' AS weakness_type, player_id, is_free_agent, is_injured,
-         |       player_name, avg_$c AS metric_value, position, salary, '$reason' AS reason
-         |FROM ranked WHERE rank_avg_$c <= 5$posPred""".stripMargin
+         |       player_name, $avgCol AS metric_value, position, salary, '$reason' AS reason
+         |FROM ranked WHERE rank_$avgCol <= 5$posPred""".stripMargin
     }.mkString("\nUNION ALL\n")
     s"""WITH weak AS (
        |  SELECT season2, weakness_type FROM gold.team_weaknesses_unpivoted

@@ -68,16 +68,13 @@ object ChunkStream {
       idCol: String,
       textCol: String,
       chunkWords: Int = 16,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        RegistryCompaction.maybeCompact(spark, chunksPath, batchId, compactEvery)
-        RegistryCompaction.maybeCompactTiered(spark, chunksPath, batchId, compactMaxParts)
-        val standing = spark.read.parquet(chunksPath)
-          .filter(col("batch_id") =!= batchId) // replay: ignore own prior attempt
+        val standing = RegistryCompaction
+          .standing(spark, chunksPath, batchId, compactMaxParts)
           .select(col("h"))
         // ONE chunk build feeds the rewrite and the admission (shared via
         // the library's checkpoint-for-the-call discipline)

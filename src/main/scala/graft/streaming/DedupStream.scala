@@ -50,16 +50,13 @@ object DedupStream {
       textCol: String,
       threshold: Double,
       admitUnique: Boolean = true,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        RegistryCompaction.maybeCompact(spark, corpusPath, batchId, compactEvery)
-        RegistryCompaction.maybeCompactTiered(spark, corpusPath, batchId, compactMaxParts)
-        val corpus = spark.read.parquet(corpusPath)
-          .filter(col("batch_id") =!= batchId) // replay: ignore own prior attempt
+        val corpus = RegistryCompaction
+          .standing(spark, corpusPath, batchId, compactMaxParts)
           .select(col(idCol), col(textCol))
           .withColumn("__new", lit(false))
         val arrived = batch.select(col(idCol), col(textCol))

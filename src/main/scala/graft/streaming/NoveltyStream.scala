@@ -58,16 +58,13 @@ object NoveltyStream {
       idCol: String,
       textCol: String,
       n: Int = 8,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        RegistryCompaction.maybeCompact(spark, gramsPath, batchId, compactEvery)
-        RegistryCompaction.maybeCompactTiered(spark, gramsPath, batchId, compactMaxParts)
-        val standing = spark.read.parquet(gramsPath)
-          .filter(col("batch_id") =!= batchId) // replay: ignore own prior attempt
+        val standing = RegistryCompaction
+          .standing(spark, gramsPath, batchId, compactMaxParts)
           .select(col("h"))
         // ONE gram build feeds scoring and admission (shared via the
         // library's checkpoint-for-the-call discipline; see

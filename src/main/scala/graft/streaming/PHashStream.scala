@@ -47,17 +47,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Registry compaction: the registry accrues one parquet partition per
   * micro-batch and is re-read in full every batch — correct forever,
   * but at stream scale the small files accumulate and the scan
-  * amortizes badly. With `compactEvery = N > 0`, every Nth batch first
-  * folds the standing registry into a single `batch_id=-(id+2)`
-  * partition (negative, so it can never collide with a real batch or
-  * the -1 seed) and deletes the subsumed partitions. Crash-safe
-  * against a replay of the compacting batch: the fold is written
-  * before any delete and is a `.distinct()` of whatever partitions
-  * remain, so a crash between write and delete leaves transient
-  * doc_id duplicates that the replayed fold collapses again, and the
-  * per-batch DISTINCT on candidate pairs keeps the pair inventory
-  * byte-identical through the window (PHashStreamSpec pins inventory
-  * equality across a compaction boundary).
+  * amortizes badly. With `compactMaxParts = N > 0`, a batch that finds
+  * more than N standing partitions first folds the smallest half of
+  * them into one negative `batch_id` partition ([[RegistryCompaction]],
+  * the size-tiered fold and its crash protocol). The fold is a
+  * `.distinct()` of rows the registry already holds, so the pair
+  * inventory is byte-identical with or without it (PHashStreamSpec
+  * pins inventory equality across fold boundaries).
   */
 object PHashStream {
 
@@ -65,15 +61,14 @@ object PHashStream {
     * binary). Near-dup pairs (doc_a < doc_b, hamming) land under
     * `pairsPath/batch_id=<id>`; the growing signature registry under
     * `registryPath/batch_id=<id>` (seed any pre-existing corpus under
-    * batch_id=-1 with columns (doc_id, phash)). `compactEvery = N > 0`
-    * folds the registry into one partition every Nth batch. */
+    * batch_id=-1 with columns (doc_id, phash)). `compactMaxParts = N > 0`
+    * keeps the registry at most N + 1 partitions. */
   def startPerceptualNearDup(
       newMedia: DataFrame,
       registryPath: String,
       pairsPath: String,
       checkpoint: String,
       maxHamming: Int = 7,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery = {
     require(maxHamming >= 0 && maxHamming <= 7,
       s"8-band blocking guarantees recall only for maxHamming in [0,7], got $maxHamming")
@@ -92,15 +87,8 @@ object PHashStream {
           // no-op when the payload bytes are identical).
           .groupBy("doc_id").agg(min(col("phash")).as("phash"))
 
-        RegistryCompaction.maybeCompact(spark, registryPath, batchId,
-          compactEvery, Some("doc_id BIGINT, phash BIGINT, batch_id BIGINT"))
-        RegistryCompaction.maybeCompactTiered(spark, registryPath, batchId,
-          compactMaxParts, Some("doc_id BIGINT, phash BIGINT, batch_id BIGINT"))
-
-        val standing = spark.read
-          .schema("doc_id BIGINT, phash BIGINT, batch_id BIGINT")
-          .parquet(registryPath)
-          .filter(col("batch_id") =!= batchId)
+        val standing = RegistryCompaction.standing(spark, registryPath, batchId,
+            compactMaxParts, Some("doc_id BIGINT, phash BIGINT, batch_id BIGINT"))
           .select(col("doc_id"), col("phash"))
         // Duplicate-ingest gate: a doc_id already in the registry (seeded
         // at batch_id=-1 or ingested by an earlier batch) is dropped here

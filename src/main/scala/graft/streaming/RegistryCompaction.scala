@@ -1,10 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Shared registry-compaction protocol for the standing-state streams.
+/** Shared standing-registry protocol for the standing-state streams.
   *
   * Every standing-registry stream here (PHash signatures, segment/span
   * hashes, novelty grams, chunk hashes, the incremental-dedup corpus,
@@ -12,92 +12,70 @@ import org.apache.spark.sql.functions._
   * partition `batch_id=<id>` per micro-batch, the full registry
   * re-read every batch with the CURRENT batch's partition excluded (so
   * a replayed batch overwrites its previous attempt instead of judging
-  * against it). Correct forever — but at stream scale the small files
-  * accumulate and the per-batch scan amortizes badly. This utility
-  * folds the standing partitions into a single negative partition
-  * every N batches, preserving semantics for every registry whose
-  * rows form a SET (all of the above: consumers take membership or
-  * MIN per key, never row counts — a `.distinct()` fold changes
-  * neither). Measured (BENCH_NEW_r15 `registry_compaction`): over a
-  * 40-batch sf0.1 segment-dedup stream, compactEvery=8 cuts total
-  * stream wall ~34 % and steady-state per-batch cost ~30 % including
-  * the folds' own cost — and the uncompacted gap only widens with
-  * stream lifetime.
+  * against it). [[standing]] is that read, and the one place it is
+  * written down. Correct forever — but at stream scale the small files
+  * accumulate and the per-batch scan amortizes badly, so with
+  * `maxParts > 0` the read first runs the size-tiered fold below. The
+  * fold preserves semantics for every registry whose rows form a SET
+  * (all of the above: consumers take membership or MIN per key, never
+  * row counts — a `.distinct()` fold changes neither).
   *
-  * Protocol (crash-safe against a replay of the compacting batch
-  * stopping at ANY point — PHashCompactProtocolSpec replays each
-  * window directly):
-  *
-  *   1. write `distinct(standing)` to the hidden dir `_compact_tmp`
-  *      (underscore-prefixed: partition discovery never sees it);
-  *      Spark's `_SUCCESS` marker records completion.
-  *   2. delete every `batch_id=*` partition except the compacting
-  *      batch's own (including any prior crashed attempt's target).
-  *   3. rename tmp → `batch_id=-(batchId+2)` (atomic directory move;
-  *      negative, so it can never collide with a real batch id or the
-  *      conventional -1 seed partition).
-  *
-  * A replay finding a COMPLETE tmp (marker present) skips step 1 — the
-  * tmp already holds the full fold, and recomputing it after a partial
-  * delete would lose the deleted partitions' rows — and just finishes
-  * the delete + rename. A replay finding no tmp recomputes from
-  * whatever partitions remain (either nothing was folded yet, or a
-  * finished compaction already renamed — then nothing is left to
-  * subsume and the call is a no-op). The `.distinct()` makes the fold
-  * idempotent across overlapping attempts.
+  * The fold is the LSM/Lucene size-tiered rule: trigger only when MORE
+  * than `maxParts` standing partitions exist, and fold ONLY the
+  * smallest-by-bytes ⌈half⌉ of them into `batch_id=-(batchId+2)`
+  * (negative, so it can never collide with a real batch id or the
+  * conventional -1 seed), leaving large folded runs in place. Runs
+  * then grow geometrically, each row is rewritten O(log N) times over
+  * the stream's life, and the directory count stays ≤ maxParts + 1 —
+  * constant per-batch listing cost at ANY registry size. A fold of the
+  * WHOLE registry every c batches rewrites O(N²/c) registry rows over N
+  * batches; SCALE.md "Standing-registry compaction an order of
+  * magnitude up" measured it tying the tiered fold at best and losing
+  * to no compaction at all on shorter streams, so the tiered fold is
+  * the only one.
   */
 object RegistryCompaction {
 
-  /** Run [[compact]] on the canonical cadence: every `compactEvery`-th
-    * batch (0 disables — the default everywhere, preserving the
-    * pre-round-15 layout byte-for-byte). */
-  def maybeCompact(
+  /** The standing registry for `batchId`: runs [[maybeCompactTiered]],
+    * then reads `registryPath` without the batch's own partition (a
+    * replay ignores its earlier attempt). `schema` (DDL including a
+    * `batch_id BIGINT` column) pins the read; None infers it from the
+    * files. */
+  def standing(
       spark: SparkSession,
       registryPath: String,
       batchId: Long,
-      compactEvery: Int,
-      schema: Option[String] = None): Unit =
-    if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
-      compact(spark, registryPath, batchId, schema)
+      maxParts: Int,
+      schema: Option[String] = None): DataFrame = {
+    maybeCompactTiered(spark, registryPath, batchId, maxParts, schema)
+    read(spark, registryPath, schema).filter(col("batch_id") =!= batchId)
+  }
 
-  /** Size-tiered fold — the geometric form the sf1 measurement forces
-    * (BENCH_NOTES_r17 / SCALE.md "compaction at sf1"): the flat
-    * [[compact]] rewrites the ENTIRE standing registry every
-    * `compactEvery` batches, so its total rewrite work over N batches
-    * is O(N²/cadence) in registry size — measured profitable at sf0.1
-    * (−34 %, small registry, many dirs) but break-even-to-worse at sf1
-    * where the fold's rewrite dominates the small-files saving it buys.
-    * The tiered rule is the LSM/Lucene answer: trigger only when MORE
-    * than `maxParts` standing partitions exist, and fold ONLY the
-    * smallest-by-bytes ⌈half⌉ of them, leaving large folded runs in
-    * place. Runs then grow geometrically, each row is rewritten
-    * O(log N) times over the stream's life, and the directory count
-    * stays ≤ maxParts + 1 — constant per-batch listing cost at ANY
-    * registry size. Consumers are unaffected: the layout is still
-    * `batch_id=<id>` dirs (folds land at unique negative ids), rows
-    * still form a SET, and membership/MIN-per-key reads are invariant
-    * to which dir holds a row (TieredCompactionSpec pins twin-run
-    * equality, the bound, and the crash windows).
+  private def read(spark: SparkSession, registryPath: String,
+      schema: Option[String]): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(registryPath)
+
+  /** Size-tiered fold of the standing partitions (everything except
+    * `batchId`'s own); `maxParts <= 0` disables it.
     *
-    * Crash protocol (same tmp-dir discipline as [[compact]], extended
-    * with a fold-set manifest because a subset fold must remember
-    * WHICH dirs it subsumed):
+    * Crash protocol (a fold-set manifest, because a subset fold must
+    * remember WHICH dirs it subsumed):
     *
-    *   1. write `distinct(fold set rows)` to `_compact_tmp_tiered`
-    *      (its OWN dir — never the flat protocol's `_compact_tmp`, so
-    *      neither recovery can misread the other's tmp; Spark's
-    *      `_SUCCESS` lands with the files), then write the manifest
-    *      `_folded` listing the subsumed partition names — the
-    *      manifest, not `_SUCCESS`, is the completion marker;
+    *   1. write `distinct(fold set rows)` to the hidden dir
+    *      `_compact_tmp_tiered` (underscore-prefixed: partition
+    *      discovery never sees it), then write the manifest `_folded`
+    *      listing the subsumed partition names — the manifest, not
+    *      Spark's `_SUCCESS`, is the completion marker;
     *   2. delete exactly the manifest's partitions;
-    *   3. rename tmp → `batch_id=-(batchId+2)`.
+    *   3. rename tmp → `batch_id=-(batchId+2)`; a failed rename fails
+    *      the batch, whose replay finishes from the manifest.
     *
     * Replay windows: target dir already exists → this batch's fold
     * finished, no-op. Tmp without manifest → the fold never completed
     * and nothing was deleted — drop tmp, refold from the live listing.
     * Tmp with manifest → finish steps 2–3 verbatim (recomputing after
     * a partial delete would lose subsumed rows). */
-  def maybeCompactTiered(
+  private[streaming] def maybeCompactTiered(
       spark: SparkSession,
       registryPath: String,
       batchId: Long,
@@ -109,24 +87,8 @@ object RegistryCompaction {
     if (!fs.exists(root)) return
     val target = new Path(root, s"batch_id=${-(batchId + 2)}")
     if (fs.exists(target)) return // replay of a finished fold
-    // Tiered folds live in their OWN tmp dir (round-17 advice): a
-    // half-fold parked in the flat protocol's `_compact_tmp` carries
-    // Spark's `_SUCCESS` before the `_folded` manifest lands, and a
-    // replay running the flat pass first would read that marker as a
-    // COMPLETE FULL fold — delete every standing partition and rename
-    // the half-fold into place, losing all rows that lived only in the
-    // unfolded large partitions. Separate dirs make the two recoveries
-    // unambiguous; [[compact]] additionally refuses any tmp holding a
-    // manifest (a legacy shared-dir fold from a pre-upgrade crash),
-    // and the legacy check below lets THIS recovery finish such folds.
     val tmp = new Path(root, "_compact_tmp_tiered")
-    val legacyTmp = new Path(root, "_compact_tmp")
-    val legacyManifested = fs.exists(new Path(legacyTmp, "_folded"))
-    val tmpDir = if (legacyManifested) legacyTmp else tmp
-    val manifest = new Path(tmpDir, "_folded")
-    def standing() = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != s"batch_id=$batchId")
+    val manifest = new Path(tmp, "_folded")
 
     val foldNames: Seq[String] =
       if (fs.exists(manifest)) {
@@ -137,15 +99,16 @@ object RegistryCompaction {
         text.split("\n").toSeq.filter(_.nonEmpty)
       } else {
         if (fs.exists(tmp)) fs.delete(tmp, true) // incomplete: refold
-        val parts = standing()
+        val parts = fs.listStatus(root).map(_.getPath)
+          .filter(p => p.getName.startsWith("batch_id=") &&
+            p.getName != s"batch_id=$batchId")
         if (parts.length <= maxParts) return
         val bySize = parts
           .map(p => p -> fs.getContentSummary(p).getLength)
           .sortBy { case (p, len) => (len, p.getName) }
         val names = bySize.take((parts.length + 1) / 2).map(_._1.getName)
         val ids = names.map(_.stripPrefix("batch_id=").toLong)
-        val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-        reader.parquet(registryPath)
+        read(spark, registryPath, schema)
           .filter(col("batch_id").isin(ids: _*))
           .drop("batch_id")
           .distinct()
@@ -156,43 +119,6 @@ object RegistryCompaction {
         names.toSeq
       }
     foldNames.foreach(n => fs.delete(new Path(root, n), true))
-    fs.rename(tmpDir, target)
-  }
-
-  /** Fold every standing partition (everything except `batchId`'s own)
-    * into `batch_id=-(batchId+2)`. `schema` (DDL including a
-    * `batch_id BIGINT` column) pins the read where the stream itself
-    * reads with an explicit schema; None infers from the files. */
-  def compact(
-      spark: SparkSession,
-      registryPath: String,
-      batchId: Long,
-      schema: Option[String] = None): Unit = {
-    val root = new Path(registryPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return
-    val target = s"batch_id=${-(batchId + 2)}"
-    val tmp = new Path(root, "_compact_tmp")
-    // a manifest marks a TIERED half-fold (legacy shared-dir crash):
-    // treating it as a complete FULL fold would delete standing
-    // partitions the half-fold never subsumed — leave it for the
-    // tiered recovery, which knows exactly which dirs it covers
-    if (fs.exists(new Path(tmp, "_folded"))) return
-    val tmpComplete = fs.exists(new Path(tmp, "_SUCCESS"))
-    def partitions() = fs.listStatus(root).map(_.getPath)
-      .filter(p => p.getName.startsWith("batch_id=") &&
-        p.getName != s"batch_id=$batchId")
-    if (!tmpComplete) {
-      if (partitions().isEmpty) return // nothing standing to fold
-      val reader = schema.fold(spark.read)(s => spark.read.schema(s))
-      val reg = reader.parquet(registryPath)
-      reg
-        .filter(col("batch_id") =!= batchId)
-        .drop("batch_id")
-        .distinct()
-        .write.mode("overwrite").parquet(tmp.toString)
-    }
-    partitions().foreach(p => fs.delete(p, true))
-    fs.rename(tmp, new Path(root, target))
+    require(fs.rename(tmp, target), s"tiered fold rename failed: $tmp -> $target")
   }
 }

@@ -39,6 +39,8 @@ import graft.operators.Dedup
   */
 object SegmentDedupStream {
 
+  private val registryDdl = "h BIGINT, k BIGINT, batch_id BIGINT"
+
   /** Per-doc segment occurrence frame: (doc_id, source, k, h, n_toks)
     * with k = doc_id·2²⁰ + position (the x139 winner encoding). */
   private[streaming] def segments(docs: DataFrame): DataFrame = {
@@ -66,20 +68,13 @@ object SegmentDedupStream {
       registryPath: String,
       statsPath: String,
       checkpoint: String,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        RegistryCompaction.maybeCompact(spark, registryPath, batchId,
-          compactEvery, Some("h BIGINT, k BIGINT, batch_id BIGINT"))
-        RegistryCompaction.maybeCompactTiered(spark, registryPath, batchId,
-          compactMaxParts, Some("h BIGINT, k BIGINT, batch_id BIGINT"))
-        val standingMin = spark.read
-          .schema("h BIGINT, k BIGINT, batch_id BIGINT")
-          .parquet(registryPath)
-          .filter(col("batch_id") =!= batchId)
+        val standingMin = RegistryCompaction.standing(spark, registryPath,
+            batchId, compactMaxParts, Some(registryDdl))
           .groupBy(col("h")).agg(min(col("k")).as("kprev"))
         val occ = segments(batch.toDF())
         // deterministic winner rule (min k), batch-local then vs the
@@ -120,7 +115,7 @@ object SegmentDedupStream {
   def winners(spark: org.apache.spark.sql.SparkSession,
       registryPath: String): DataFrame =
     spark.read
-      .schema("h BIGINT, k BIGINT, batch_id BIGINT")
+      .schema(registryDdl)
       .parquet(registryPath)
       .groupBy(col("h")).agg(min(col("k")).as("kmin"))
 }

@@ -36,6 +36,8 @@ import graft.operators.Dedup
   */
 object SpanDedupStream {
 
+  private val registryDdl = "h BIGINT, kk BIGINT, batch_id BIGINT"
+
   /** Start the gate over a streaming frame carrying (doc_id, text).
     * Rewritten documents (doc_id, n_tokens, n_removed, text_kept) land
     * under `keptPath/batch_id=<id>`; one exact-integer metrics row
@@ -50,20 +52,13 @@ object SpanDedupStream {
       metricsPath: String,
       checkpoint: String,
       k: Int = 8,
-      compactEvery: Int = 0,
       compactMaxParts: Int = 0): StreamingQuery =
     newDocs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        RegistryCompaction.maybeCompact(spark, registryPath, batchId,
-          compactEvery, Some("h BIGINT, kk BIGINT, batch_id BIGINT"))
-        RegistryCompaction.maybeCompactTiered(spark, registryPath, batchId,
-          compactMaxParts, Some("h BIGINT, kk BIGINT, batch_id BIGINT"))
-        val standingMin = spark.read
-          .schema("h BIGINT, kk BIGINT, batch_id BIGINT")
-          .parquet(registryPath)
-          .filter(col("batch_id") =!= batchId)
+        val standingMin = RegistryCompaction.standing(spark, registryPath,
+            batchId, compactMaxParts, Some(registryDdl))
           .groupBy(col("h")).agg(min(col("kk")).as("kprev"))
         val docs = batch.select(col("doc_id"), col("text"))
         val grams = Dedup.spanGrams(docs, "doc_id", "text", k)
@@ -102,7 +97,7 @@ object SpanDedupStream {
   def winners(spark: org.apache.spark.sql.SparkSession,
       registryPath: String): DataFrame =
     spark.read
-      .schema("h BIGINT, kk BIGINT, batch_id BIGINT")
+      .schema(registryDdl)
       .parquet(registryPath)
       .groupBy(col("h")).agg(min(col("kk")).as("kmin"))
 }

@@ -9,22 +9,38 @@ import graft.SparkSuite
 import graft.operators.Corpus
 import graft.sources.Tables
 
-/** The generalized registry compaction ([[RegistryCompaction]]) wired
+/** The size-tiered registry fold ([[RegistryCompaction]]) wired
   * through representative standing-registry streams: output inventory
   * must be IDENTICAL to the uncompacted run's (which the per-stream
   * specs already pin against the batch operators), the registry's
-  * content must survive the folds, and the partition layout must
-  * actually collapse. Two representatives get full batch-operator
-  * equality: SegmentDedupStream (explicit-schema standing read,
-  * min-per-key consumer) and NoveltyStream (inferred-schema read,
-  * membership consumer); the remaining four (incremental-dedup corpus,
-  * span registry, chunk store, embedding registry) get the generic
-  * twin-run law — identical bit-faithful outputs with compaction on
-  * and off over the same five batches. PHashStream's own spec covers
-  * the pair-generation shape; PHashCompactProtocolSpec replays the
-  * crash windows of the shared protocol directly. */
+  * content must survive the folds, and the partition layout must stay
+  * within the tiered bound. Two representatives get full
+  * batch-operator equality: SegmentDedupStream (explicit-schema
+  * standing read, min-per-key consumer) and NoveltyStream
+  * (inferred-schema read, membership consumer); the remaining four
+  * (incremental-dedup corpus, span registry, chunk store, embedding
+  * registry) get the generic twin-run law — identical bit-faithful
+  * outputs with compaction on and off over the same five batches.
+  * PHashStream's own spec covers the pair-generation shape;
+  * TieredCompactionSpec replays the crash windows of the fold
+  * directly.
+  *
+  * Every compacted run uses `compactMaxParts = 2` over the seed plus
+  * five batches: batch 2 is the first to find three standing
+  * partitions, so folds fire at batches 2, 3 and 4, and the batch-4
+  * fold lands at `batch_id=-6`. */
 class RegistryCompactionStreamsSpec extends SparkSuite {
   private val sf = "/root/testdata/sf0.001"
+  private val maxParts = 2
+
+  /** The tiered bound after the five batches: the batch-4 fold and
+    * batch 4's own partition stand, within `maxParts + 1` dirs. */
+  private def assertFolded(reg: String, what: String): Unit = {
+    val parts = partitionNames(reg)
+    assert(parts.contains("batch_id=-6") && parts.contains("batch_id=4"),
+      s"$what registry did not fold at batch 4: $parts")
+    assert(parts.size <= maxParts + 1, s"$what registry over the tiered bound: $parts")
+  }
 
   private def partitionNames(reg: String): Set[String] =
     new java.io.File(reg).listFiles()
@@ -45,7 +61,7 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
       }.mkString("|")).sorted.toSeq
   }
 
-  test("segment dedup with compactEvery=2 over 5 batches: stats == batch x139, registry folds to winners") {
+  test("segment dedup with compactMaxParts=2 over 5 batches: stats == batch x139, registry folds to winners") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -61,14 +77,14 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
       .sortBy(_._1)
     // five ascending id-range batches (the ordered-arrival contract);
-    // compactions fire at batches 2 and 4
+    // folds fire at batches 2, 3 and 4
     val batches = docs.grouped((docs.length + 4) / 5).toSeq
     assert(batches.length === 5)
 
     val src = MemoryStream[(Long, String, String)]
     val q = SegmentDedupStream.startSegmentDedup(
       src.toDF().toDF("doc_id", "source", "text"),
-      registryPath, statsPath, ckpt, compactEvery = 2)
+      registryPath, statsPath, ckpt, compactMaxParts = maxParts)
     try {
       batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
 
@@ -100,8 +116,7 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
       assert(pairs(SegmentDedupStream.winners(spark, registryPath))
         === batchWinners)
 
-      // batch-4 fold subsumed everything before it
-      assert(partitionNames(registryPath) === Set("batch_id=-6", "batch_id=4"))
+      assertFolded(registryPath, "segment")
     } finally q.stop()
   }
 
@@ -126,56 +141,55 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
     val cents = graft.operators.Dedup.ivfCentroids(
       t.embeddings, "vec_id", "embedding", k = 16)
 
-    /** Runs `start(root, compactEvery)` over the five batches via
-      * `feed`, twice (uncompacted + compactEvery=2), then asserts each
-      * relative output path's image matches and the compacted run's
-      * `registrySub` folded to {-6, 4}. */
+    /** Runs `start(root, compactMaxParts)` over the five batches, twice
+      * (uncompacted + `maxParts`), then asserts each relative output
+      * path's image matches and the compacted run's `registrySub`
+      * folded within the tiered bound. */
     def twinRun[T](
         prefix: String,
         registrySub: String,
         outputs: Seq[String],
         start: (String, Int) => (MemoryStream[T], org.apache.spark.sql.streaming.StreamingQuery),
         batches: Seq[Seq[T]]): Unit = {
-      def run(compactEvery: Int): String = {
-        val root = Files.createTempDirectory(s"$prefix-$compactEvery").toString
-        val (src, q) = start(root, compactEvery)
+      def run(compactMaxParts: Int): String = {
+        val root = Files.createTempDirectory(s"$prefix-$compactMaxParts").toString
+        val (src, q) = start(root, compactMaxParts)
         try batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
         finally q.stop()
         root
       }
-      val (a, b) = (run(0), run(2))
+      val (a, b) = (run(0), run(maxParts))
       (outputs :+ registrySub).foreach { sub =>
         assert(image(s"$a/$sub") === image(s"$b/$sub"), s"$prefix $sub diverged")
         assert(image(s"$a/$sub").nonEmpty, s"$prefix $sub empty")
       }
-      assert(partitionNames(s"$b/$registrySub") === Set("batch_id=-6", "batch_id=4"),
-        s"$prefix registry did not fold")
+      assertFolded(s"$b/$registrySub", prefix)
     }
 
     twinRun[(Long, String)]("dedup", "corpus", Seq("verdicts"),
-      (root, ce) => {
+      (root, mp) => {
         Seq((1000001L, "alpha beta gamma delta epsilon zeta"))
           .toDF("doc_id", "text").write.parquet(s"$root/corpus/batch_id=-1")
         val src = MemoryStream[(Long, String)]
         (src, DedupStream.startIncrementalDedup(
           src.toDF().toDF("doc_id", "text"),
           s"$root/corpus", s"$root/verdicts", s"$root/ckpt",
-          "doc_id", "text", threshold = 0.5, compactEvery = ce))
+          "doc_id", "text", threshold = 0.5, compactMaxParts = mp))
       }, docBatches)
 
     twinRun[(Long, String)]("span", "registry", Seq("kept", "metrics"),
-      (root, ce) => {
+      (root, mp) => {
         Seq.empty[(Long, Long)].toDF("h", "kk")
           .write.parquet(s"$root/registry/batch_id=-1")
         val src = MemoryStream[(Long, String)]
         (src, SpanDedupStream.startSpanDedup(
           src.toDF().toDF("doc_id", "text"),
           s"$root/registry", s"$root/kept", s"$root/metrics", s"$root/ckpt",
-          compactEvery = ce))
+          compactMaxParts = mp))
       }, docBatches)
 
     twinRun[(Long, String)]("chunk", "chunks", Seq("rewrites"),
-      (root, ce) => {
+      (root, mp) => {
         ChunkStream.seedChunks(
           Seq.empty[(Long, String)].toDF("doc_id", "text"),
           s"$root/chunks", "doc_id", "text")
@@ -183,11 +197,11 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
         (src, ChunkStream.startChunkRewrite(
           src.toDF().toDF("doc_id", "text"),
           s"$root/chunks", s"$root/rewrites", s"$root/ckpt",
-          "doc_id", "text", compactEvery = ce))
+          "doc_id", "text", compactMaxParts = mp))
       }, docBatches)
 
     twinRun[(Long, Seq[Float])]("embdedup", "registry", Seq("pairs"),
-      (root, ce) => {
+      (root, mp) => {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           org.apache.spark.sql.types.StructType.fromDDL(
@@ -198,11 +212,11 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
           src.toDF().toDF("vec_id", "embedding")
             .withColumn("embedding", col("embedding").cast("array<float>")),
           cents, s"$root/registry", s"$root/pairs", s"$root/ckpt",
-          threshold = 0.4, compactEvery = ce))
+          threshold = 0.4, compactMaxParts = mp))
       }, vecBatches)
   }
 
-  test("novelty scoring with compactEvery=2 over 5 batches: verdicts == batch, gram store folds intact") {
+  test("novelty scoring with compactMaxParts=2 over 5 batches: verdicts == batch, gram store folds intact") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -225,7 +239,7 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
     val src = MemoryStream[(Long, String)]
     val q = NoveltyStream.startNoveltyScoring(
       src.toDF().toDF("doc_id", "text"), gramsPath, verdictsPath, ckpt,
-      "doc_id", "text", compactEvery = 2)
+      "doc_id", "text", compactMaxParts = maxParts)
     try {
       batches.foreach { b => src.addData(b: _*); q.processAllAvailable() }
 
@@ -244,7 +258,7 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
         .select("h").distinct().collect().map(_.getLong(0)).toSet
       assert(stored.toSet === allGrams)
 
-      assert(partitionNames(gramsPath) === Set("batch_id=-6", "batch_id=4"))
+      assertFolded(gramsPath, "novelty")
     } finally q.stop()
   }
 }

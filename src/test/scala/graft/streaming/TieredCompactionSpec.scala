@@ -8,9 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 
 /** Laws of [[RegistryCompaction.maybeCompactTiered]] — the geometric
-  * fold the sf1 measurement forced (flat every-N folds rewrite the
-  * whole standing registry; at sf1 the rewrite dominates the
-  * small-files saving). Pinned here:
+  * fold of the standing registries. Pinned here:
   *
   *  - trigger law: no-op at or under `maxParts` standing partitions;
   *    above it, exactly the smallest-by-bytes ⌈half⌉ fold away and the
@@ -18,18 +16,20 @@ import graft.SparkSuite
   *    the property that bounds per-row rewrites to O(log N));
   *  - content: the registry's row SET is invariant under any sequence
   *    of tiered folds;
-  *  - crash windows (manifest protocol): tmp WITHOUT a manifest means
-  *    nothing was deleted — replay refolds from the live listing; tmp
-  *    WITH a manifest means deletes may have started — replay finishes
+  *  - crash windows (manifest protocol, staged in the fold's own tmp
+  *    dir `_compact_tmp_tiered`): tmp WITHOUT a manifest means nothing
+  *    was deleted — replay refolds from the live listing; tmp WITH a
+  *    manifest means deletes may have started — replay finishes
   *    delete+rename from the manifest, never recomputes (recomputing
   *    after a partial delete would lose subsumed rows); a finished
   *    fold's replay (target exists) is a no-op;
   *  - stream twin-run: SegmentDedupStream with `compactMaxParts` on vs
-  *    all compaction off produces bit-identical outputs with a bounded
+  *    off produces bit-identical outputs with a bounded
   *    registry directory count.
   */
 class TieredCompactionSpec extends SparkSuite {
   private val ddl = "doc_id BIGINT, phash BIGINT, batch_id BIGINT"
+  private val tmpDir = "_compact_tmp_tiered"
 
   private def regDf(rows: Seq[(Long, Long)]): DataFrame = {
     import spark.implicits._
@@ -85,12 +85,14 @@ class TieredCompactionSpec extends SparkSuite {
     // simulate: tmp parquet written (with _SUCCESS) but no _folded
     // manifest — by protocol nothing has been deleted yet
     regDf(Seq(999L -> 999L)).coalesce(1)
-      .write.mode("overwrite").parquet(s"$reg/_compact_tmp")
-    assert(new java.io.File(s"$reg/_compact_tmp/_SUCCESS").exists())
+      .write.mode("overwrite").parquet(s"$reg/$tmpDir")
+    assert(new java.io.File(s"$reg/$tmpDir/_SUCCESS").exists())
     RegistryCompaction.maybeCompactTiered(spark, reg, 4, maxParts = 4, Some(ddl))
     // the stale tmp (with its bogus row) must be DISCARDED, not trusted
     assert(readRegistry(reg) === docs)
     assert(partitionNames(reg) === Set("batch_id=-6", "batch_id=2", "batch_id=3"))
+    assert(!new java.io.File(s"$reg/$tmpDir").exists(),
+      "the refold's tmp must be renamed away on completion")
   }
 
   test("crash mid-delete (manifest present): replay finishes, never recomputes") {
@@ -103,9 +105,9 @@ class TieredCompactionSpec extends SparkSuite {
     spark.read.schema(ddl).parquet(reg)
       .filter(col("batch_id").isin(ids: _*))
       .drop("batch_id").distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$reg/_compact_tmp")
+      .coalesce(1).write.mode("overwrite").parquet(s"$reg/$tmpDir")
     java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$reg/_compact_tmp/_folded"),
+      java.nio.file.Paths.get(s"$reg/$tmpDir/_folded"),
       foldNames.mkString("\n").getBytes("UTF-8"))
     def rmdir(p: String): Unit = {
       val d = new java.io.File(p)
@@ -118,62 +120,6 @@ class TieredCompactionSpec extends SparkSuite {
     assert(readRegistry(reg) === docs,
       "rows of the already-deleted partition must survive via the tmp fold")
     assert(partitionNames(reg) === Set("batch_id=-6", "batch_id=2", "batch_id=3"))
-  }
-
-  test("cross-protocol: flat recovery refuses a tiered half-fold (manifested tmp)") {
-    // Round-17 advice (medium): with BOTH compactEvery and
-    // compactMaxParts enabled, a tiered attempt that crashed after its
-    // parquet write shares the replayed batch with the flat pass,
-    // which runs FIRST (stream hook order). Under the old shared
-    // `_compact_tmp`, flat read the half-fold's `_SUCCESS` as a
-    // complete FULL fold, deleted EVERY standing partition and renamed
-    // the half-fold into place — permanently losing the rows that
-    // lived only in the unfolded large partitions. Flat must refuse a
-    // manifested tmp and leave recovery to the tiered pass.
-    val (reg, docs) = freshRegistry()
-    val foldNames = Seq("batch_id=-1", "batch_id=0", "batch_id=1")
-    val ids = foldNames.map(_.stripPrefix("batch_id=").toLong)
-    spark.read.schema(ddl).parquet(reg)
-      .filter(col("batch_id").isin(ids: _*))
-      .drop("batch_id").distinct()
-      .coalesce(1).write.mode("overwrite").parquet(s"$reg/_compact_tmp")
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$reg/_compact_tmp/_folded"),
-      foldNames.mkString("\n").getBytes("UTF-8"))
-    def rmdir(p: String): Unit = {
-      val d = new java.io.File(p)
-      Option(d.listFiles).getOrElse(Array.empty).foreach(f => rmdir(f.getPath))
-      d.delete()
-    }
-    rmdir(s"$reg/batch_id=0") // the tiered mid-delete crash
-
-    // flat pass on the replayed batch: MUST be a no-op
-    RegistryCompaction.compact(spark, reg, 4, Some(ddl))
-    assert(partitionNames(reg) ===
-      Set("batch_id=-1", "batch_id=1", "batch_id=2", "batch_id=3"),
-      "flat recovery must not touch partitions while a tiered manifest stands")
-
-    // tiered pass then finishes the legacy-dir fold without loss
-    RegistryCompaction.maybeCompactTiered(spark, reg, 4, maxParts = 4, Some(ddl))
-    assert(readRegistry(reg) === docs)
-    assert(partitionNames(reg) === Set("batch_id=-6", "batch_id=2", "batch_id=3"))
-  }
-
-  test("separate tmp dirs: a tiered refold never disturbs flat's standing tmp") {
-    val (reg, docs) = freshRegistry()
-    // flat's COMPLETE full fold (crashed before its deletes): tmp with
-    // _SUCCESS, no manifest — owned by flat's recovery
-    regDf(Seq(500L -> 600L)).coalesce(1)
-      .write.mode("overwrite").parquet(s"$reg/_compact_tmp")
-    assert(new java.io.File(s"$reg/_compact_tmp/_SUCCESS").exists())
-    // a tiered trigger in the same window folds via its OWN tmp dir
-    RegistryCompaction.maybeCompactTiered(spark, reg, 4, maxParts = 4, Some(ddl))
-    assert(readRegistry(reg) === docs)
-    assert(partitionNames(reg) === Set("batch_id=-6", "batch_id=2", "batch_id=3"))
-    assert(new java.io.File(s"$reg/_compact_tmp/_SUCCESS").exists(),
-      "flat's tmp must survive a tiered fold untouched")
-    assert(!new java.io.File(s"$reg/_compact_tmp_tiered").exists(),
-      "the tiered tmp must be renamed away on completion")
   }
 
   test("stream twin-run: segment dedup with tiered compaction == compaction off, bounded dirs") {
