@@ -61,7 +61,11 @@ object Bench {
       s.toIntOption.filter(_ >= 1).getOrElse(sys.error(
         s"SPARK_GRAFT_BENCH_PASSES must be a positive integer, got '$s'"))
     }
-    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") != "0"
+    val warmup = sys.env.getOrElse("SPARK_GRAFT_BENCH_WARMUP", "1") match {
+      case "1" => true
+      case "0" => false
+      case s => sys.error(s"SPARK_GRAFT_BENCH_WARMUP must be 0 or 1, got '$s'")
+    }
     val spark = Sessions.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -21,7 +21,10 @@ object Sessions {
   /** `SPARK_GRAFT_CPUS`, the core count every main runs at (default 4).
     * Set it on every invocation: the recorded `Bench` artifacts ran at 32
     * and the recorded `Explain` plans at 8. */
-  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4) { s =>
+    s.toIntOption.filter(_ >= 1).getOrElse(sys.error(
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'"))
+  }
 
   def local(cores: Int): SparkSession = SparkSession.builder()
     .master(s"local[$cores]")

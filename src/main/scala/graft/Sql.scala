@@ -4,10 +4,13 @@ import graft.sources.Tables
 
 /** Ad-hoc SQL entry point:
   * `SPARK_GRAFT_CPUS=8 runMain graft.Sql "<query>" [sfDir]`
-  * Registers the testdata tables as views plus the engine's native
-  * functions (float_vec_dot, poly_hash) and runs the query — the
+  * Registers the testdata tables as views and runs the query — the
   * "switch your SQL client to this engine" surface (pair with
-  * `NbaPipeline.saveAsTables` for the silver./gold. catalog).
+  * `NbaPipeline.saveAsTables` for the silver./gold. catalog). The
+  * engine's native functions (float_vec_dot, poly_hash, ...) come with
+  * the session: `Sessions.local` sets
+  * `spark.sql.extensions=graft.GraftExtensions`, and any other SQL client
+  * gets them with the same conf.
   */
 object Sql {
   def main(args: Array[String]): Unit = {
@@ -16,8 +19,6 @@ object Sql {
     val spark = Sessions.local(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Tables(spark, sfDir).registerAll()
-    graft.functions.VectorExpressions.ensureRegistered(spark)
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     spark.sql(query).show(100, truncate = false)
     spark.stop()
   }

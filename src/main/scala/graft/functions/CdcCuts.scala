@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -67,19 +66,4 @@ case class CdcCuts(child: Expression, k: Int, divisor: Int)
       c => s"graft.functions.CdcUtil.cuts($c, $k, $divisor)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object CdcFunctions {
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cdc_cuts",
-      exprs => {
-        def intLit(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => sys.error(s"cdc_cuts $name must be an int literal, got $other")
-        }
-        CdcCuts(exprs.head, intLit(exprs(1), "k"), intLit(exprs(2), "divisor"))
-      },
-      "built-in"
-    )
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -104,13 +103,4 @@ case class FakeEmbed8(child: Expression) extends MediaFeatureExpr {
       c => s"graft.functions.MediaFeatureUtil.embed8Data($c)")
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object MediaFeatureFunctions {
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "byte_hist16", exprs => ByteHist16(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fake_embed8", exprs => FakeEmbed8(exprs.head), "built-in")
-  }
 }

@@ -47,8 +47,9 @@ object Text {
   def md5Fingerprint(textCol: String): Column =
     md5(col(textCol).cast("binary"))
 
-  /** Portable polynomial fingerprint (codegen PolyHash; register via
-    * PolyHashFunctions.ensureRegistered or GraftExtensions). */
+  /** Portable polynomial fingerprint (codegen PolyHash; the session needs
+    * `spark.sql.extensions=graft.GraftExtensions`, which `Sessions.local`
+    * sets). */
   def polyFingerprint(textCol: String): Column = expr(s"poly_hash($textCol)")
 
   /** Word n-grams over a pre-split array column; empty below n words.

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -528,62 +528,6 @@ object VectorExpressions {
         case ArrayType(_, containsNull) => containsNull
         case _ => true
       }))
-
-  /** Register `float_vec_dot` in the session's function registry (idempotent)
-    * and return a Column-building helper usable from the DataFrame API. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "float_vec_dot",
-      exprs => FloatVecDot(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_vec_sqdist",
-      exprs => LongVecSqDist(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "long_vec_dot",
-      exprs => LongVecDot(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hyperplane_bands",
-      exprs => HyperplaneBands(exprs(0), intLit(exprs(1)), intLit(exprs(2)), intLit(exprs(3))),
-      "built-in"
-    )
-    // pq_subdist(a, b, sub, subDim): exact int64 subspace sq-L2 under
-    // ⌊v·10⁶⌋ quantization. Inputs must be roughly unit-scale floats
-    // (|v| ≲ 5·10², see PqSubSqDist's INPUT-MAGNITUDE CONTRACT) — the
-    // int64 sum wraps silently beyond that, diverging from any
-    // wider-accumulator engine.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "pq_subdist",
-      exprs => PqSubSqDist(exprs(0), exprs(1), exprs(2), intLit(exprs(3))),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "known_not_null_elements",
-      exprs => KnownNotNullElements(exprs(0)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_value",
-      exprs => ZValue(exprs(0), exprs(1)),
-      "built-in"
-    )
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hilbert_value",
-      exprs => HilbertValue(exprs(0), exprs(1)),
-      "built-in"
-    )
-  }
-
-  private def intLit(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other =>
-      throw new IllegalArgumentException(s"hyperplane_bands expects int literals, got $other")
-  }
 
   /** Dot product column over two array<float> columns (by name/expr text,
     * resolved through the registry — keeps us off Spark-internal Column

@@ -152,15 +152,13 @@ object Corpus {
     * The shared currency of decontamination (x40), novelty (x55) and
     * their streaming twins — shuffles carry the 8-byte hash, never gram
     * text. Docs shorter than `n` words produce no grams. */
-  def gramHashes(df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame = {
+  def gramHashes(df: DataFrame, idCol: String, textCol: String, n: Int = 8): DataFrame =
     // one rolling-hash pass per document (SpanHashesUtil): bit-identical
     // to poly_hash over the joined n-token window, without materializing
     // n× the corpus text pre-hash
-    graft.functions.SpanHashesFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol),
         explode(expr(s"span_hashes($textCol, $n)")).as("h"))
       .distinct()
-  }
 
   /** Per-document n-gram novelty vs the earlier corpus (`idCol` order
     * standing in for ingest order): the fraction of a doc's distinct
@@ -222,7 +220,6 @@ object Corpus {
     * sort of its own chunk list. */
   def chunkDedupRewrite(
       df: DataFrame, idCol: String, textCol: String, chunkWords: Int = 16): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val chunks = df.select(col(idCol), expr(
       s"posexplode(transform(sequence(0, CAST(ceil(size(split($textCol, ' ')) / $chunkWords.0) AS INT) - 1), " +
         s"i -> array_join(slice(split($textCol, ' '), i * $chunkWords + 1, $chunkWords), ' ')))"
@@ -288,7 +285,6 @@ object Corpus {
     * possible whole-corpus comparison. */
   def snapshotDiff(
       oldDf: DataFrame, newDf: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(oldDf.sparkSession)
     val a = oldDf.select(col(idCol).as("old_id"), expr(s"poly_hash($textCol)").as("h_old"))
     val b = newDf.select(col(idCol).as("new_id"), expr(s"poly_hash($textCol)").as("h_new"))
     a.join(b, col("old_id") === col("new_id"), "full_outer")
@@ -310,7 +306,6 @@ object Corpus {
   def snapshotChurnBySource(
       oldDf: DataFrame, newDf: DataFrame, idCol: String, textCol: String,
       srcCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(oldDf.sparkSession)
     val a = oldDf.select(col(idCol).as("old_id"), col(srcCol).as("old_src"),
       expr(s"poly_hash($textCol)").as("h_old"))
     val b = newDf.select(col(idCol).as("new_id"), col(srcCol).as("new_src"),
@@ -660,7 +655,6 @@ object Corpus {
     * write path this manifests for is `partitionBy(shard)`. */
   def shardManifest(
       df: DataFrame, idCol: String, textCol: String, nShards: Int): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     df.select(
         expr(s"poly_hash(CAST($idCol AS STRING)) % $nShards").as("shard"),
         col(idCol).cast("long").as("__id"),
@@ -1067,7 +1061,6 @@ object Corpus {
     * `n_tokens`, `score`, `keep`). */
   def hashedClassifierScore(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol), explode(split(col(textCol), " ")).as("__w"))
       .select(col(idCol),
         expr("(poly_hash(__w) % 4096) * CAST(2654435761 AS BIGINT) % 2001 - 1000")
@@ -1122,7 +1115,6 @@ object Corpus {
   def dsirWeights(df: DataFrame, idCol: String, textCol: String,
       targetPred: org.apache.spark.sql.Column,
       buckets: Int = 4096): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val spark = df.sparkSession
     val tok = df.select(targetPred.as("__tgt"),
         explode(split(col(textCol), " ")).as("__w"))
@@ -1158,7 +1150,6 @@ object Corpus {
     * token's bucket exists by construction. */
   def dsirApply(df: DataFrame, idCol: String, textCol: String,
       weights: DataFrame, buckets: Int = 4096): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol), explode(split(col(textCol), " ")).as("__w"))
       .select(col(idCol), expr(s"poly_hash(__w) % $buckets").as("bucket"))
       .join(broadcast(weights), Seq("bucket"), "left")
@@ -1183,7 +1174,6 @@ object Corpus {
     * replay exactly in the oracle. */
   def countMinCells(df: DataFrame, textCol: String,
       rows: Int = 3, buckets: Int = 1024): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     df.select(explode(split(col(textCol), " ")).as("__w"))
       .select(col("__w"),
         explode(sequence(lit(0), lit(rows - 1))).as("__r"))
@@ -1206,7 +1196,6 @@ object Corpus {
     * and broadcasts under the probe frame. */
   def countMinEstimate(cells: DataFrame, words: DataFrame, wordCol: String,
       rows: Int = 3, buckets: Int = 1024): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(words.sparkSession)
     val probes = words
       .select(col(wordCol),
         explode(sequence(lit(0), lit(rows - 1))).as("__r"))
@@ -1414,7 +1403,6 @@ object Corpus {
     * never a float sum. */
   def datacard(df: DataFrame, idCol: String, textCol: String,
       srcCol: String, langCol: String, charsCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val base = df.groupBy(col(srcCol))
       .agg(count(lit(1)).as("n_docs"),
         sum(graft.functions.Text.tokenCount(textCol)).as("n_tokens"),
@@ -1455,8 +1443,6 @@ object Corpus {
     * ride through. */
   def cdcChunks(df: DataFrame, idCol: String, textCol: String,
       k: Int = 4, divisor: Int = 16, keep: Seq[String] = Nil): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
-    graft.functions.CdcFunctions.ensureRegistered(df.sparkSession)
     df
       .select((Seq(col(idCol)) ++ keep.map(col) :+
         split(col(textCol), " ").as("words")): _*)

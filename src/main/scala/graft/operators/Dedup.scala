@@ -73,7 +73,6 @@ object Dedup {
   def duplicateSpans(df: DataFrame, idCol: String, textCol: String,
       k: Int = 8): DataFrame = {
     require(k >= 2, s"span window must cover at least 2 tokens, got $k")
-    graft.functions.SpanHashesFunctions.ensureRegistered(df.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // one rolling-hash pass per document (SpanHashesUtil) — the scaladoc's
     // named 100 TB term closed: O(chars) pre-shuffle work, 8 bytes per
@@ -140,7 +139,6 @@ object Dedup {
     // (SpanHashesUtil's scaladoc carries the identity proof; the old
     // array_join(slice(...)) form survives in SpanHashesSpec as the
     // equivalence oracle)
-    graft.functions.SpanHashesFunctions.ensureRegistered(df.sparkSession)
     df.select(col(idCol),
         expr(s"posexplode(span_hashes($textCol, $k))").as(Seq("pos", "h")))
       .select(col(idCol), col("pos").cast("long").as("pos"), col("h"))
@@ -236,7 +234,6 @@ object Dedup {
   ): DataFrame = {
     val shBase =
       if (hashShingles) {
-        graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
         rawShingles(df, idCol, textCol, n)
           .select(col(idCol), expr("poly_hash(sh)").as("sh"))
           .distinct()
@@ -411,17 +408,14 @@ object Dedup {
 
   /** MinHash signatures (constants shared with MinHashAggregator) plus
     * banded LSH keys; candidates at scale = equi-join on a band. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
+  def minhashSignatures(df: DataFrame, idCol: String, textCol: String): DataFrame =
     minhashSignaturesFromShingles(shingles(df, idCol, textCol), idCol)
-  }
 
   /** [[minhashSignatures]] from an existing `(idCol, sh)` shingle frame —
     * lets a caller materialize the shingle set once and feed signatures,
     * verification joins, and per-doc counts from the same blocks. */
   def minhashSignaturesFromShingles(sh: DataFrame, idCol: String): DataFrame = {
     import graft.functions.MinHashAggregator.{A, B, P}
-    graft.functions.PolyHashFunctions.ensureRegistered(sh.sparkSession)
     val hashed = sh.withColumn("sh_h", expr("poly_hash(sh)"))
     val sigs = hashed
       .groupBy(col(idCol))
@@ -440,7 +434,6 @@ object Dedup {
 
   /** 16-bit SimHash per document (bit-majority of word hashes). */
   def simhash16(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val words = df
       .select(col(idCol), explode(split(col(textCol), " ")).as("word"))
       .withColumn("wh", expr("poly_hash(word)"))
@@ -512,11 +505,9 @@ object Dedup {
 
   /** Vectors with L2 norm attached; registers `float_vec_dot` in the
     * session so each public entry point works standalone. */
-  private[graft] def withNorm(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
+  private[graft] def withNorm(df: DataFrame, idCol: String, vecCol: String): DataFrame =
     df.select(col(idCol), col(vecCol).as("embedding"),
       sqrt(expr(s"float_vec_dot($vecCol, $vecCol)")).as("nrm"))
-  }
 
   /** Exact cosine near-dup pairs above `threshold` (all-pairs baseline;
     * at scale pre-block with [[lshBuckets]] and join on bucket). */
@@ -584,7 +575,6 @@ object Dedup {
       df: DataFrame, idCol: String, vecCol: String,
       queryPred: org.apache.spark.sql.Column, k: Int,
       dims: Seq[Int], fullDim: Int): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val allDims = (dims :+ fullDim).distinct.sorted
     def normCols(prefix: String) = allDims.map(d =>
       sqrt(expr(s"float_vec_dot(slice(embedding, 1, $d), embedding)"))
@@ -634,7 +624,6 @@ object Dedup {
   def hardNegatives(
       df: DataFrame, idCol: String, vecCol: String, labelCol: String,
       anchorPred: org.apache.spark.sql.Column, k: Int): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val n = df.select(col(idCol), col(labelCol).as("lbl"),
       col(vecCol).as("embedding"),
       sqrt(expr(s"float_vec_dot($vecCol, $vecCol)")).as("nrm"))
@@ -673,7 +662,6 @@ object Dedup {
   def labelCentroidProfile(
       df: DataFrame, idCol: String, vecCol: String, labelCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val ex = df.select(col(labelCol).as("label"), col(idCol).as("vid"),
       posexplode(col(vecCol)).as(Seq("dim", "v")))
     val byCell = Window.partitionBy(col("label"), col("dim"))
@@ -1042,7 +1030,6 @@ object Dedup {
     * frozen artifact. */
   def opqRotate(df: DataFrame, idCol: String, vecCol: String,
       perm: DataFrame): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val srcByNew = perm
       .select(col("pos").cast("long"), col("newpos").cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -2018,7 +2005,6 @@ object Dedup {
     * to the HOF fold family [[planeDot]] documents, which remains the
     * DuckDB-oracle twin). */
   def lshBuckets(df: DataFrame, idCol: String, vecCol: String, dims: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     df.select(
       df.columns.map(col) :+
         expr(s"element_at(hyperplane_bands($vecCol, 1, 8, $dims), 1)").as("bucket"): _*
@@ -2036,7 +2022,6 @@ object Dedup {
   def lshBandKeys(
       df: DataFrame, vecCol: String,
       bands: Int = 4, planesPerBand: Int = 4, dims: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     // all band keys in ONE codegen pass over the vector (the per-plane
     // HOF folds are the interpreted documentation/oracle twin), then
     // posexplode to (band, band_key) rows
@@ -2070,7 +2055,6 @@ object Dedup {
   def lshBandCandidates(
       df: DataFrame, idCol: String, vecCol: String,
       bands: Int = 4, planesPerBand: Int = 4): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val keys = lshBandKeys(df.select(col(idCol), col(vecCol).as("embedding")),
       "embedding", bands, planesPerBand)
       .select(col(idCol), col("band"), col("band_key"))
@@ -2299,7 +2283,6 @@ object Dedup {
     * end to end. `lloydIters = 0` is the seed rung x184/x185 pin. */
   def rvqIndex(df: DataFrame, idCol: String, vecCol: String,
       ks: Int = 16, lloydIters: Int = 0): (DataFrame, DataFrame) = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val q = df.select(col(idCol),
       // re-tag: the double→bigint cast is force-nullable but never
       // nulls under the ⌊v·10⁶⌋ input-magnitude contract (PqSubSqDist
@@ -2420,7 +2403,6 @@ object Dedup {
   private[graft] def rvqAnswer(
       qraw: DataFrame, codes: DataFrame, recon: DataFrame,
       topK: Int, excludeSelf: Boolean): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(qraw.sparkSession)
     val queries = qraw.select(col("query_id"),
       // re-tag per the ⌊v·10⁶⌋ input-magnitude contract — see rvqIndex
       expr("known_not_null_elements(" +
@@ -3017,7 +2999,6 @@ object Dedup {
   def leakageSafeSplitFromPairs(
       df: DataFrame, idCol: String, pairs: DataFrame,
       trainCut: Int = 98, valCut: Int = 99): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val roots = connectedComponents(pairs, "doc_a", "doc_b", maxIter = 64)
     val withRoot = df
       .join(roots, df(idCol) === roots("node"), "left")
@@ -3048,7 +3029,6 @@ object Dedup {
   def semanticSafeSplit(
       df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, k: Int = 16): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val pairs = embeddingNearDupsIvf(df, idCol, vecCol, threshold, k)
     val roots = connectedComponents(pairs, "vec_a", "vec_b")
     val withRoot = df

@@ -69,7 +69,6 @@ object Layout {
       tileBits: Int = 4,
       boxLo: Long = 28672L, boxHi: Long = 36863L,
       curveTileWidth: Long = 0L): DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     val x = col(xCol).cast("long")
     val y = col(yCol).cast("long")
     val mm = df.agg(

@@ -64,7 +64,6 @@ object Multimodal {
     * Oracle-checked end to end (x192). */
   def extractFeatures(media: Dataset[MediaRecord])(implicit spark: SparkSession): Dataset[MediaFeatures] = {
     import spark.implicits._
-    graft.functions.MediaFeatureFunctions.ensureRegistered(spark)
     media.toDF().select(
       col("doc_id"),
       length(col("content")).cast("long").as("nBytes"),
@@ -115,10 +114,8 @@ object Multimodal {
     * decoded luma with the identical downstream plan). One codegen'd
     * O(bytes) expression inside the scan projection: no shuffle, no
     * intermediate array, 8 output bytes per row. */
-  def perceptualHashes(media: DataFrame, idCol: String, binCol: String): DataFrame = {
-    graft.functions.BlockHashFunctions.ensureRegistered(media.sparkSession)
+  def perceptualHashes(media: DataFrame, idCol: String, binCol: String): DataFrame =
     media.select(col(idCol), expr(s"block_hash64($binCol)").as("phash"))
-  }
 
   /** Real-decode hook: when a decoder exists upstream (a `mapInPandas`
     * / codec stage producing a grayscale plane), pass its output as a
@@ -131,7 +128,6 @@ object Multimodal {
     * plan. */
   def perceptualHashes(media: DataFrame, idCol: String, binCol: String,
       lumaCol: String): DataFrame = {
-    graft.functions.BlockHashFunctions.ensureRegistered(media.sparkSession)
     media.select(col(idCol),
       expr(s"block_hash64(coalesce($lumaCol, $binCol))").as("phash"))
   }

@@ -144,7 +144,6 @@ object TrainingData {
         s"SELECT doc_id, ${mhA.indices.map(j => s"mh$j").mkString(", ")}, $bands FROM sigs"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     Dedup.minhashSignatures(t.documents, "doc_id", "text")
   }
 
@@ -169,7 +168,6 @@ object TrainingData {
     "x04_dedup_simhash",
     Some(s"WITH $duckSimhashCtes SELECT doc_id, simhash16 FROM sims")
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     Dedup.simhash16(t.documents, "doc_id", "text")
   }
 
@@ -328,7 +326,6 @@ object TrainingData {
         s"CAST(${duckPolyHash("text")} AS BIGINT) AS poly_fp FROM documents"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     t.documents.select(
       col("doc_id"),
       graft.functions.Text.md5Fingerprint("text").as("content_md5"),
@@ -358,7 +355,6 @@ object TrainingData {
         "ORDER BY cosine DESC, neighbor_id) AS rn FROM sims) WHERE rn <= 5"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.annTopK(t.embeddings, "vec_id", "embedding", col("query_id") < 10, k = 5)
   }
 
@@ -398,7 +394,6 @@ object TrainingData {
         s"WHERE ${duckDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     embNearDupExact(t)
   }
 
@@ -428,7 +423,6 @@ object TrainingData {
         s"WHERE ${duckDot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) >= 0.4"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.embeddingNearDupsBucketedFromCandidates(
       t.embeddings, "vec_id", "embedding", threshold = 0.4, embBandCands(t))
   }
@@ -467,7 +461,6 @@ object TrainingData {
         "WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common) >= 0.5"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     // the verified-pair projection of the banding family's shared audit
     // frame ([[mhBandAudit]]): identical candidate set and common/jaccard
     // arithmetic; a 0-common candidate can never reach jaccard 0.5
@@ -542,7 +535,6 @@ object TrainingData {
         ") WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.ivfSearch(t.embeddings, "vec_id", "embedding",
       col("query_id") < 10, k = 16, nprobe = 2, topK = 5,
       flatIndex = Some(ivfFlatIndex(t, 16)))
@@ -601,7 +593,6 @@ object TrainingData {
         ") WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.ivfSearch(t.embeddings, "vec_id", "embedding",
       col("query_id") < 10, k = 16, nprobe = 2, topK = 5, lloydIters = 1)
   }
@@ -772,7 +763,6 @@ object TrainingData {
         "WHERE rn = CAST(floor((n_vecs + 1) / 2) AS BIGINT)"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.labelCentroidProfile(t.embeddings, "vec_id", "embedding", "label")
   }
 
@@ -806,7 +796,6 @@ object TrainingData {
     )
   ) { t =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     // top-3 lists = the rank-3 prefix of the session's exact top-5
     // registry under the same (cosine desc, neighbor asc) order — the
     // n² similarity pass is paid once per session, not per query
@@ -892,7 +881,6 @@ object TrainingData {
         "LEFT JOIN com ON c.doc_a = com.doc_a AND c.doc_b = com.doc_b"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     mhBandAudit(t)
   }
 
@@ -1020,7 +1008,6 @@ object TrainingData {
         s"FROM (SELECT doc_id, ${duckPolyHash("text")} % 100 AS bucket FROM documents) t"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     t.documents
       .select(col("doc_id"), expr("poly_hash(text) % 100").as("bucket"))
       .select(col("doc_id"), col("bucket"),
@@ -1078,7 +1065,6 @@ object TrainingData {
     // division, so the >= 0.5 verification filter selects the same
     // pairs. Only the exact-content check (one text-keyed semi-join)
     // and the verdict assembly run per pass.
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val docs = t.documents
     val isNewA = col("doc_a") % 10 === 7
     val isNewB = col("doc_b") % 10 === 7
@@ -1218,7 +1204,6 @@ object TrainingData {
         "WHERE c.doc_id IS NULL AND d.doc_id % 97 <> 0"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val docs = t.documents
     val n = docs.select(col("doc_id"), size(split(col("text"), " ")).cast("long").as("n_tokens"))
     val bounds = n.agg(
@@ -1227,7 +1212,6 @@ object TrainingData {
     val keepLen = n.crossJoin(broadcast(bounds))
       .filter(col("n_tokens") >= col("lo") && col("n_tokens") <= col("hi"))
       .select("doc_id")
-    graft.functions.SpanHashesFunctions.ensureRegistered(t.spark)
     val grams = docs
       .select(col("doc_id"), explode(expr("span_hashes(text, 8)")).as("h"))
       .distinct()
@@ -1355,7 +1339,6 @@ object TrainingData {
         "CAST(n_dup_chunks AS DOUBLE) / n_chunks AS dup_frac FROM per_doc"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val chunks = t.documents
       .select(col("doc_id"), expr(
         "posexplode(transform(sequence(0, CAST(ceil(size(split(text, ' ')) / 16.0) AS INT) - 1), " +
@@ -1458,7 +1441,6 @@ object TrainingData {
         "FROM keyed) t"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.semanticSafeSplit(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = ivfAutoK(t))
   }
@@ -1493,7 +1475,6 @@ object TrainingData {
     )
   ) { t =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val topk = Dedup.annTopK(t.embeddings, "vec_id", "embedding",
       col("query_id") % 10 === 0, k = 5)
     val labels = t.embeddings.select(col("vec_id"), col("label"))
@@ -1541,7 +1522,6 @@ object TrainingData {
         "FROM m GROUP BY doc_id"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     Corpus.chunkDedupRewrite(t.documents, "doc_id", "text")
   }
 
@@ -2070,7 +2050,6 @@ object TrainingData {
         "FROM n GROUP BY 1"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     t.embeddings
       .select(sqrt(graft.functions.VectorExpressions
         .vecDot("embedding", "embedding")).as("nrm"))
@@ -2213,7 +2192,6 @@ object TrainingData {
         s"${duckPolyHash("chunk")} AS h FROM c"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     t.documents
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .select(col("doc_id"), col("ws"),
@@ -2286,7 +2264,6 @@ object TrainingData {
         "FROM capped WHERE rn <= 10"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val docs = t.documents
     val ws = docWordStats(t)
       .select(col("doc_id"), col("n_tokens").as("n_words"), col("nd"))
@@ -2341,7 +2318,6 @@ object TrainingData {
         "FROM cand WHERE bit_count(xor(ha, hb)) <= 3"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     Dedup.simhashHammingPairs(t.documents, "doc_id", "text", maxHamming = 3)
   }
 
@@ -2401,7 +2377,6 @@ object TrainingData {
         "SELECT in_degree, CAST(COUNT(*) AS BIGINT) AS n_vectors FROM ind GROUP BY in_degree"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val topk = exactTopK5(t)
     val deg = topk.groupBy(col("neighbor_id")).agg(count(lit(1)).as("cnt"))
     t.embeddings.select(col("vec_id"))
@@ -2468,7 +2443,6 @@ object TrainingData {
         "FROM prs JOIN csplit a ON prs.doc_a = a.doc_id JOIN csplit b ON prs.doc_b = b.doc_id"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val pairs = nearDupPairs(t).select("doc_a", "doc_b")
     val naive = t.documents.select(col("doc_id"),
       when(expr("poly_hash(text) % 100") < 80, "train")
@@ -2565,7 +2539,6 @@ object TrainingData {
         "FROM docs CROSS JOIN vocab"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val uni = t.documents
       .select(explode(split(col("text"), " ")).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
@@ -2694,7 +2667,6 @@ object TrainingData {
         "FROM scored GROUP BY bucket"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     // both sides come from the session registries: true pairs at the
     // 0.05 floor from [[ngramPairsLoose]], banded candidates from
     // [[mhBandAudit]] — the curve is one pair-sized join + tiny agg
@@ -2858,7 +2830,6 @@ object TrainingData {
         "GROUP BY bucket"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     // both sides from the session registries: the exact 0.4 inventory
     // and the banded candidate set — the curve is one pair-sized join
     Dedup.embeddingBandingRecallCurveFromFrames(
@@ -2936,7 +2907,6 @@ object TrainingData {
         "CAST(SUM(s) AS DOUBLE) / COUNT(*) AS mean_surprisal FROM sc GROUP BY doc_id"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val bucketed = t.documents.withColumn("bucket", expr("poly_hash(text) % 100"))
     val lm = Corpus.unigramLm(bucketed.filter(col("bucket") < 98), "text")
     Corpus.lmDocSurprisal(
@@ -3139,7 +3109,6 @@ object TrainingData {
         "FROM lexr FULL OUTER JOIN vecr ON lexr.doc_id = vecr.doc_id"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val wLex = Window.orderBy(col("score").desc, col("doc_id"))
     val lex = Corpus.bm25TopK(t.documents, "doc_id", "text",
         Seq("spark", "join", "data"), 50)
@@ -3513,7 +3482,6 @@ object TrainingData {
         "FROM c JOIN g ON c.canon_hash = g.canon_hash"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val canon = trim(regexp_replace(regexp_replace(lower(col("text")),
       lit("[^a-z0-9 ]"), lit(" ")), lit(" +"), lit(" ")))
     val h = t.documents
@@ -4199,7 +4167,6 @@ object TrainingData {
         org.apache.spark.sql.DataFrame) = {
     val k = ivfAutoK(t)
     val kc = ivfAutoKc(t)
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val packed = Registries.frame(t.spark, t.dir, s"ivf2_index_k${k}_kc$kc") {
       val (fp, ac, asg) =
         Dedup.ivfIndexTwoLevel(t.embeddings, "vec_id", "embedding", k, kc)
@@ -4302,7 +4269,6 @@ object TrainingData {
     * non-null-element at the read boundary for the branch-free
     * kernels. */
   private[graft] def pqBookLloyd1(t: Tables): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Registries.frame(t.spark, t.dir, "pq_book_lloyd1_m8ks16") {
       Dedup.pqCodebookLloyd(t.embeddings, "vec_id", "embedding", iters = 1)
     }.select(col("cent_id"), expr("known_not_null_elements(ce)").as("ce"))
@@ -4325,7 +4291,6 @@ object TrainingData {
     * ADC side), x151 (rerank shortlist), x153 (IVFADC code side), x154
     * (packed form). n·m rows of small integers. */
   private[graft] def pqCodesSeed(t: Tables): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Registries.frame(t.spark, t.dir, "pq_codes_seed_m8ks16") {
       Dedup.pqEncode(t.embeddings, "vec_id", "embedding",
         Dedup.pqCodebook(t.embeddings, "vec_id", "embedding"))
@@ -4342,7 +4307,6 @@ object TrainingData {
     * [[ivf2AutoIndex]]. */
   private[graft] def ivfFlatIndex(t: Tables, k: Int):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val packed = Registries.frame(t.spark, t.dir, s"ivf_flat_index_k$k") {
       val (cents, asg) =
         Dedup.ivfIndex(t.embeddings, "vec_id", "embedding", k, 0)
@@ -4400,7 +4364,6 @@ object TrainingData {
     * + 256 recon rows. */
   private[graft] def rvqSeedIndex(t: Tables):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val packed = Registries.frame(t.spark, t.dir, "rvq_seed_index_ks16") {
       val (codes, recon) = Dedup.rvqIndex(t.embeddings, "vec_id", "embedding")
       codes.select(lit("c").as("role"), col("vec_id").as("id"),
@@ -4540,7 +4503,6 @@ object TrainingData {
     * the one cost this registry stops paying per consumer. */
   private[graft] def embNearDupExact(t: Tables): org.apache.spark.sql.DataFrame =
     Registries.frame(t.spark, t.dir, "emb_neardup_exact_t0.4") {
-      graft.functions.VectorExpressions.ensureRegistered(t.spark)
       Dedup.embeddingNearDups(t.embeddings, "vec_id", "embedding", threshold = 0.4)
     }
 
@@ -4564,7 +4526,6 @@ object TrainingData {
     * each top-5 list. */
   private[graft] def exactTopK5(t: Tables): org.apache.spark.sql.DataFrame =
     Registries.frame(t.spark, t.dir, "exact_ann_topk5") {
-      graft.functions.VectorExpressions.ensureRegistered(t.spark)
       Dedup.annTopK(t.embeddings, "vec_id", "embedding", lit(true), k = 5)
     }
 
@@ -4760,7 +4721,6 @@ object TrainingData {
         "CAST(COUNT(*) OVER (PARTITION BY cluster_root) AS BIGINT) AS cluster_size FROM cl"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     // lists → mutual edges → guarded CC served from the shared
     // [[ivfMutualCcAuto]] registry (x183 runs the identical chain)
     ivfMutualCcAuto(t)
@@ -4789,7 +4749,6 @@ object TrainingData {
         "SELECT in_degree, CAST(COUNT(*) AS BIGINT) AS n_vectors FROM ind GROUP BY in_degree"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val lists = ivfListsAuto(t, lit(true), nprobe = 2, topK = 5)
     val deg = lists.groupBy(col("neighbor_id")).agg(count(lit(1)).as("cnt"))
     t.embeddings.select(col("vec_id"))
@@ -4830,7 +4789,6 @@ object TrainingData {
         "FROM occ JOIN win USING (h) GROUP BY source"
     )
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val words = split(col("text"), " ")
     val occ = t.documents
       .select(col("doc_id"), col("source"), words.as("w"))
@@ -4938,7 +4896,6 @@ object TrainingData {
         "FROM tot t JOIN top p USING (cell)"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val assigned = ivfFlatIndex(t, 16)._2
       .select(col("vec_id"), col("cell"))
     val lab = assigned
@@ -5025,7 +4982,6 @@ object TrainingData {
         s"WHERE ${cos("a.embedding", "a.nrm", "b.embedding", "b.nrm")} >= 0.4"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.embeddingNearDupsIvf(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = 16, assignedIn = Some(ivfFlatIndex(t, 16)._2))
   }
@@ -5055,7 +5011,6 @@ object TrainingData {
         "FROM win w JOIN embeddings q ON w.query_id = q.vec_id WHERE w.rn = 1"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val topk = ivfListsAuto(t, col("query_id") % 10 === 0,
       nprobe = 2, topK = 5)
     val labels = t.embeddings.select(col("vec_id"), col("label"))
@@ -5148,7 +5103,6 @@ object TrainingData {
         s"WHERE ${cos("a.embedding", "a.nrm", "b.embedding", "b.nrm")} >= 0.4"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.embeddingNearDupsIvf(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = ivfAutoK(t),
       assignedIn = Some(ivfFlatIndex(t, ivfAutoK(t))._2))
@@ -5184,7 +5138,6 @@ object TrainingData {
         s"WHERE ${cos("a.embedding", "a.nrm", "b.embedding", "b.nrm")} >= 0.4"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.embeddingNearDupsIvf(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = 16, nassign = 2)
   }
@@ -5231,7 +5184,6 @@ object TrainingData {
         s"WHERE ${cos("a.embedding", "a.nrm", "b.embedding", "b.nrm")} >= 0.4"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.embeddingNearDupsIvfTwoLevel(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = 64, kc = 8)
   }
@@ -5279,7 +5231,6 @@ object TrainingData {
     "x149_pq_adc_topk",
     Some(s"WITH $duckPqCtes SELECT query_id, neighbor_id, adc_dist FROM pqtop")
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.pqSearch(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, topK = 5, codesIn = Some(pqCodesSeed(t)))
   }
@@ -5310,7 +5261,6 @@ object TrainingData {
         "GROUP BY 1"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val adc5 = Dedup.pqSearch(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, topK = 5, codesIn = Some(pqCodesSeed(t)))
     val ex5 = Dedup.pqQuantizedExactTopK(t.embeddings, "vec_id", "embedding",
@@ -5347,7 +5297,6 @@ object TrainingData {
         "FROM pqrd) t WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.pqSearchRerank(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, topK = 5, shortlist = 50,
       codesIn = Some(pqCodesSeed(t)))
@@ -5479,7 +5428,6 @@ object TrainingData {
         "FROM iprd) t WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.ivfPqSearch(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, k = ivfAutoK(t), nprobe = 4, topK = 5,
       shortlist = 50, kc = Some(ivfAutoKc(t)),
@@ -5499,7 +5447,6 @@ object TrainingData {
         "AS packed_code FROM pqcodes GROUP BY vec_id"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     // packed form of the session's seed code registry (same rows
     // pqCodesPacked derives — one shift+mask aggregate per pass)
     pqCodesSeed(t)
@@ -5551,7 +5498,6 @@ object TrainingData {
         "SELECT vec_id, sub, code FROM tcodes"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     pqCodesLloyd1(t)
       .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
   }
@@ -5748,7 +5694,6 @@ object TrainingData {
         "FROM trd) t WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     // trained book AND trained codes from the session registries
     // ([[pqBookLloyd1]]/[[pqCodesLloyd1]] — x155 trains the identical
     // artifact); only query-side ADC tables and the probe scan per pass
@@ -5953,7 +5898,6 @@ object TrainingData {
         "FROM sdist) t WHERE rn <= 5"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.ivfSqSearch(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, k = ivfAutoK(t), nprobe = 4, topK = 5,
       kc = ivfAutoKc(t), index2 = Some(ivf2AutoIndex(t)),
@@ -5998,7 +5942,6 @@ object TrainingData {
         "FROM rrd) t WHERE rn <= 5"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.sqSearchRerank(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, topK = 5, shortlist = 50,
       sqIndex = Some((sq8Codes(t), sq8Bounds(t))))
@@ -6154,7 +6097,6 @@ object TrainingData {
         "GROUP BY 1, 2"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val tok = t.documents
       .select(explode(split(col("text"), " ")).as("w"))
     val cells = Corpus.countMinCells(t.documents, "text")
@@ -6272,7 +6214,6 @@ object TrainingData {
         "FROM brd) t WHERE rn <= 5"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.bqSearchRerank(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, topK = 5, shortlist = 50,
       bqIndex = Some((bqCodes(t), bqThr(t))))
@@ -6356,7 +6297,6 @@ object TrainingData {
         "FROM crd) t WHERE rn <= 5"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.ivfBqSearch(t.embeddings, "vec_id", "embedding",
       col("vec_id") < 10, k = ivfAutoK(t), nprobe = 4, topK = 5,
       kc = ivfAutoKc(t), shortlist = 50, index2 = Some(ivf2AutoIndex(t)),
@@ -6438,7 +6378,6 @@ object TrainingData {
         "SELECT vec_id, sub, code FROM tcodes"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val perm = Dedup.opqPermutation(t.embeddings, "vec_id", "embedding")
     val rot = Dedup.opqRotate(t.embeddings, "vec_id", "embedding", perm)
     val book = Dedup.pqCodebookLloyd(rot, "vec_id", "embedding", iters = 1)
@@ -6696,7 +6635,6 @@ object TrainingData {
         duckSemDedupTail("assigned")
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.semDedup(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = ivfAutoK(t),
       assignedIn = Some(ivfFlatIndex(t, ivfAutoK(t))._2))
@@ -6715,7 +6653,6 @@ object TrainingData {
         duckSemDedupTail("iassigned")
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     Dedup.semDedupTwoLevel(t.embeddings, "vec_id", "embedding",
       threshold = 0.4, k = ivfAutoK(t), kc = ivfAutoKc(t),
       index2 = Some(ivf2AutoIndex(t)))
@@ -6840,7 +6777,6 @@ object TrainingData {
         "SELECT doc_id, score, n_tokens, cum_tokens FROM vc WHERE cum_tokens <= 15000"
     }
   ) { t =>
-    graft.functions.PolyHashFunctions.ensureRegistered(t.spark)
     val docs = t.documents
     // stages 1–2 and the word stats come from the session registries
     // (x180's blocklist verdicts, x65's quality verdicts, the shared
@@ -6898,7 +6834,6 @@ object TrainingData {
         "FROM ckeyed) t WHERE rn <= 3"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val cc = ivfMutualCcAuto(t)
     // word stats from the session registry (same (n_tokens, nd) values
     // the oracle's cws CTE derives — the registry build pays the word
@@ -7217,7 +7152,6 @@ object TrainingData {
         s"AND ${cos("a.embedding", "a.nrm", "b.embedding", "b.nrm")} <= p.pos_cos - 0.1"
     }
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val lists = ivfListsAuto(t, lit(true), nprobe = 2, topK = 1)
     val n = t.embeddings.count() // the ivfAutoK count, one cheap action
     val norms = Dedup.withNorm(t.embeddings, "vec_id", "embedding")
@@ -7348,7 +7282,6 @@ object TrainingData {
         "SELECT query_id, neighbor_id, cosine FROM ivf3lists"
     )
   ) { t =>
-    graft.functions.VectorExpressions.ensureRegistered(t.spark)
     val k = ivfAutoK(t)
     val kct = math.max(2L, Dedup.icbrt(k.toLong)).toInt
     val kcm = math.max(4, kct * kct)

@@ -123,7 +123,6 @@ object Sinks {
       df: DataFrame, path: String, idCol: String, textCol: String,
       nShards: Int): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val sharded = df.withColumn(
       "shard_id", pmod(xxhash64(col(idCol)), lit(nShards.toLong)))
     sharded.write.mode("overwrite").partitionBy("shard_id").parquet(path)
@@ -144,7 +143,6 @@ object Sinks {
   def validateCorpusShards(
       spark: SparkSession, path: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     // partition discovery types shard_id as int; the manifest stored long
     val stored = spark.read.parquet(s"$path.manifest")
       .select(col("shard_id").cast("long").as("shard_id"), col("n_docs").as("m_docs"),
@@ -225,7 +223,6 @@ object Sinks {
   private def writeCurveOrdered(
       df: DataFrame, path: String, colA: String, colB: String,
       numFiles: Int, curveFn: String): Unit = {
-    graft.functions.VectorExpressions.ensureRegistered(df.sparkSession)
     import org.apache.spark.sql.functions.{expr, max, min}
     val b = df.agg(
       min(col(colA).cast("long")), max(col(colA).cast("long")),

@@ -68,12 +68,10 @@ final class Tables private (val spark: SparkSession, val dir: String) {
     * the [[graft.functions.KnownNotNullElements]] tag declares a fact,
     * and every frame derived from this column (norms, slices,
     * quantized transforms) inherits the branch-free schema. */
-  lazy val embeddings: DataFrame = {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
+  lazy val embeddings: DataFrame =
     read("embeddings").withColumn(
       "embedding",
       org.apache.spark.sql.functions.expr("known_not_null_elements(embedding)"))
-  }
 }
 
 object Tables {

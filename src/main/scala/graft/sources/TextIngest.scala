@@ -48,7 +48,6 @@ object TextIngest {
     * because the key is the CONTENT hash, duplicate documents land in
     * one split whatever batch or stream they arrive in. */
   def withSplitAssignment(df: DataFrame): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val bucket = expr("poly_hash(text) % 100")
     df.withColumn("split_name",
       when(bucket < 98, "train").when(bucket < 99, "val").otherwise("test"))
@@ -63,7 +62,6 @@ object TextIngest {
     * under watermark; this shape needs neither). Pair with
     * [[benchmarkGramHashes]] to build the set from the benchmark frame. */
   def withContaminationFlag(df: DataFrame, benchGramHashes: Seq[Long], n: Int = 8): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
     val grams = expr(
       s"CASE WHEN size(split(text, ' ')) >= $n THEN " +
         s"transform(sequence(1, size(split(text, ' ')) - ${n - 1}), " +
@@ -77,8 +75,7 @@ object TextIngest {
     * the driver. Deliberately driver-side: benchmarks are eval-sized
     * (thousands of docs), and the literal set is what makes the
     * streaming contamination check stateless. */
-  def benchmarkGramHashes(bench: DataFrame, textCol: String, n: Int = 8): Seq[Long] = {
-    graft.functions.PolyHashFunctions.ensureRegistered(bench.sparkSession)
+  def benchmarkGramHashes(bench: DataFrame, textCol: String, n: Int = 8): Seq[Long] =
     bench
       .select(explode(expr(
         s"CASE WHEN size(split($textCol, ' ')) >= $n THEN " +
@@ -87,7 +84,6 @@ object TextIngest {
           "ELSE array() END")).as("h"))
       .distinct()
       .collect().map(_.getLong(0)).toSeq
-  }
 
   /** Continuous ingestion: the same projection over `readStream`, with
     * exact content dedup bounded to a processing-time `horizon` —

@@ -37,7 +37,6 @@ object ChunkStream {
 
   private def chunkFrame(
       docs: DataFrame, idCol: String, textCol: String, chunkWords: Int): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol), expr(
       s"posexplode(transform(sequence(0, CAST(ceil(size(split($textCol, ' ')) / $chunkWords.0) AS INT) - 1), " +
         s"i -> array_join(slice(split($textCol, ' '), i * $chunkWords + 1, $chunkWords), ' ')))"

@@ -67,7 +67,6 @@ object EmbeddingDedupStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        graft.functions.VectorExpressions.ensureRegistered(spark)
         val cents = spark.createDataFrame(
           spark.sparkContext.parallelize(centRows.toSeq, 1), centroidSchema)
         // both sides of every rescore carry the registry's write

@@ -40,7 +40,6 @@ object IvfBqServeStream {
   def buildIndex(
       corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
       k: Int): Unit = {
-    graft.functions.VectorExpressions.ensureRegistered(corpus.sparkSession)
     Dedup.ivfCentroids(corpus, idCol, vecCol, k)
       .write.mode("overwrite").parquet(s"$indexDir/cents")
     Dedup.bqThresholds(corpus, idCol, vecCol)
@@ -70,7 +69,6 @@ object IvfBqServeStream {
     require(shortlist > 0,
       "BQ serving has no rerank-free mode: flat Hamming cannot rank inside its tie bands")
     val spark = queryStream.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     def pin(name: String): DataFrame = {
       val df = spark.read.parquet(s"$indexDir/$name")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -82,7 +80,6 @@ object IvfBqServeStream {
     queryStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.functions.VectorExpressions.ensureRegistered(batch.sparkSession)
         // excludeSelf = false: serving query ids are EXTERNAL (the
         // serving-family contract)
         Dedup.ivfBqAnswer(

@@ -43,7 +43,6 @@ object IvfPqServeStream {
       corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
       k: Int, m: Int = 8, subDim: Int = 8, ks: Int = 16,
       trainIters: Int = 0): Unit = {
-    graft.functions.VectorExpressions.ensureRegistered(corpus.sparkSession)
     val cents = Dedup.ivfCentroids(corpus, idCol, vecCol, k)
     cents.write.mode("overwrite").parquet(s"$indexDir/cents")
     val book =
@@ -85,7 +84,6 @@ object IvfPqServeStream {
       nprobe: Int, topK: Int, shortlist: Int = 50,
       m: Int = 8, subDim: Int = 8): StreamingQuery = {
     val spark = queryStream.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     def pin(name: String): DataFrame = {
       val df = spark.read.parquet(s"$indexDir/$name")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -97,7 +95,6 @@ object IvfPqServeStream {
     queryStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.functions.VectorExpressions.ensureRegistered(batch.sparkSession)
         // excludeSelf = false: serving query ids are EXTERNAL — a
         // numeric collision with an unrelated corpus vid must not
         // silently drop that true neighbor (the x153 batch path, whose

@@ -39,7 +39,6 @@ object IvfSqServeStream {
   def buildIndex(
       corpus: DataFrame, idCol: String, vecCol: String, indexDir: String,
       k: Int): Unit = {
-    graft.functions.VectorExpressions.ensureRegistered(corpus.sparkSession)
     Dedup.ivfCentroids(corpus, idCol, vecCol, k)
       .write.mode("overwrite").parquet(s"$indexDir/cents")
     Dedup.sqBounds(corpus, idCol, vecCol)
@@ -69,7 +68,6 @@ object IvfSqServeStream {
       checkpoint: String,
       nprobe: Int, topK: Int, shortlist: Int = 0): StreamingQuery = {
     val spark = queryStream.sparkSession
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     def pin(name: String): DataFrame = {
       val df = spark.read.parquet(s"$indexDir/$name")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -83,7 +81,6 @@ object IvfSqServeStream {
     queryStream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        graft.functions.VectorExpressions.ensureRegistered(batch.sparkSession)
         // excludeSelf = false: serving query ids are EXTERNAL (the
         // IvfPqServeStream contract, verbatim)
         Dedup.ivfSqAnswer(

@@ -76,7 +76,6 @@ object PHashStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        graft.functions.BlockHashFunctions.ensureRegistered(spark)
         val hashed = batch.toDF()
           .select(col("doc_id"), expr("block_hash64(content)").as("phash"))
           // in-batch duplicate collapse: same doc_id arriving twice in

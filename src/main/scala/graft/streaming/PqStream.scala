@@ -56,7 +56,6 @@ object PqStream {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val spark = batch.sparkSession
-        graft.functions.VectorExpressions.ensureRegistered(spark)
         val book = spark.createDataFrame(
           spark.sparkContext.parallelize(bookRows.toSeq, 1), codebookSchema)
         Dedup.pqEncode(batch.toDF(), idCol, vecCol, book, m, subDim)

@@ -43,8 +43,7 @@ object SegmentDedupStream {
 
   /** Per-doc segment occurrence frame: (doc_id, source, k, h, n_toks)
     * with k = doc_id·2²⁰ + position (the x139 winner encoding). */
-  private[streaming] def segments(docs: DataFrame): DataFrame = {
-    graft.functions.PolyHashFunctions.ensureRegistered(docs.sparkSession)
+  private[streaming] def segments(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), col("source"), col("w"),
@@ -54,7 +53,6 @@ object SegmentDedupStream {
         (col("doc_id") * lit(1048576L) + col("s")).as("k"),
         expr("poly_hash(array_join(slice(w, s*8+1, 8), ' '))").as("h"),
         least(lit(8), size(col("w")) - col("s") * 8).cast("long").as("n_toks"))
-  }
 
   /** Start the gate over a streaming frame carrying
     * (doc_id, source, text). Per-source survival stats (the x139 report

@@ -14,7 +14,6 @@ class MinHashAggregatorSpec extends SparkSuite {
       .select(col("doc_id"), array((0 until 8).map(j => col(s"mh$j")): _*).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     // same shingle hashes, folded through the typed Aggregator
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables(spark, sf).documents
       .select(col("doc_id"), split(col("text"), " ").as("w"))
       .select(col("doc_id"), explode(expr(

@@ -15,8 +15,6 @@ import graft.SparkSuite
 class SpanHashesSpec extends SparkSuite {
   private def oldFormVsNew(texts: Seq[String], k: Int): Unit = {
     import spark.implicits._
-    PolyHashFunctions.ensureRegistered(spark)
-    SpanHashesFunctions.ensureRegistered(spark)
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     val oldH = df.select(col("id"), expr(

@@ -12,7 +12,6 @@ class VectorExpressionsSpec extends SparkSuite {
       "CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
 
   test("float_vec_dot is bit-identical to the portable HOF form") {
-    VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val a = e.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("eb"))
@@ -53,7 +52,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("hyperplane_bands is bit-identical to the per-plane HOF folds") {
-    VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val dims = 64
     // the oracle-twin fold for plane j (Dedup.planeDot's shape)
@@ -80,7 +78,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("pq_subdist is identical to the portable HOF quantize-and-sum form") {
-    VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val a = e.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = e.select(col("vec_id").as("idb"), col("embedding").as("eb"))
@@ -102,7 +99,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("z_value interleave matches a bit-by-bit reference") {
-    VectorExpressions.ensureRegistered(spark)
     def ref(a: Long, b: Long): Long =
       (0 until 32).foldLeft(0L) { (acc, i) =>
         acc | (((a >> i) & 1L) << (2 * i)) | (((b >> i) & 1L) << (2 * i + 1))
@@ -114,7 +110,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("hilbert_value through SQL matches the static xy2d on sampled points") {
-    VectorExpressions.ensureRegistered(spark)
     val rows = spark.range(0, 200)
       .selectExpr("id * 2654435761 % 65536 AS a", "id * 40503 % 65536 AS b")
       .selectExpr("a", "b", "hilbert_value(a, b) AS h").collect()
@@ -125,7 +120,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("long_vec_sqdist / long_vec_dot null-poison on null elements like the HOF twins") {
-    VectorExpressions.ensureRegistered(spark)
     // nullable-element arrays: a null slot must yield NULL, matching
     // aggregate(zip_with(...)) where the per-slot product is null and
     // acc + null poisons the fold
@@ -201,7 +195,6 @@ class VectorExpressionsSpec extends SparkSuite {
   }
 
   test("known_not_null_elements is a zero-cost pass-through that narrows the schema") {
-    VectorExpressions.ensureRegistered(spark)
     import org.apache.spark.sql.types.ArrayType
     val df = spark.sql(
       "SELECT known_not_null_elements(array(CAST(1.5 AS FLOAT), CAST(-2.5 AS FLOAT))) AS a, " +

@@ -64,7 +64,6 @@ class BqSpec extends SparkSuite {
   }
 
   test("bq rerank with corpus-wide shortlist == exact quantized-L2 top-k") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val n = emb.count().toInt
     val viaBq = Dedup.bqSearchRerank(emb, "vec_id", "embedding",
       col("vec_id") < 8, topK = 3, shortlist = n)

@@ -11,14 +11,12 @@ import graft.sources.Tables
   * whole-corpus cells, the property that makes the sketch a bounded
   * streaming/distributed summary. */
 class CountMinSpec extends SparkSuite {
-  private def cells(df: org.apache.spark.sql.DataFrame) = {
-    graft.functions.PolyHashFunctions.ensureRegistered(df.sparkSession)
+  private def cells(df: org.apache.spark.sql.DataFrame) =
     df.select(explode(split(col("text"), " ")).as("w"))
       .select(col("w"), explode(sequence(lit(0), lit(2))).as("r"))
       .select(col("r").cast("long").as("r"),
         expr("poly_hash(concat(cast(r AS string), w)) % 1024").as("bucket"))
       .groupBy(col("r"), col("bucket")).agg(count(lit(1)).as("total"))
-  }
 
   test("estimates never undercount; cells merge by SUM across partitions") {
     val docs = Tables(spark, "/root/testdata/sf0.001").documents

@@ -85,7 +85,6 @@ class CurationSpec extends SparkSuite {
     })
     // content-keyed: duplicated text across ids must land in one split
     import spark.implicits._
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val dup = Seq((1L, "spark big data"), (2L, "spark big data"), (3L, "other text"))
       .toDF("doc_id", "text")
       .select(expr("poly_hash(text) % 100").as("bucket"), col("text"))
@@ -198,7 +197,6 @@ class CurationSpec extends SparkSuite {
     assert(first.getDouble(3) == 1.0)
     // Σ n_novel = |distinct gram hashes|: each gram has exactly one first
     val totalNovel = rows.map(_.getLong(2)).sum
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val distinctGrams = graft.sources.Tables(spark, sf).documents
       .select(explode(expr(
         "CASE WHEN size(split(text, ' ')) >= 8 THEN " +
@@ -257,7 +255,6 @@ class CurationSpec extends SparkSuite {
     val split = run("x64_semantic_safe_split")
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getString(2)))).toMap
     assert(split.size === emb.count())
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val pairs = Dedup.embeddingNearDups(emb, "vec_id", "embedding", threshold = 0.4)
       .select("vec_a", "vec_b")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -283,7 +280,6 @@ class CurationSpec extends SparkSuite {
   }
 
   test("x62 invariant: every distinct chunk survives exactly once corpus-wide") {
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val docs = graft.sources.Tables(spark, sf).documents
     val out = Corpus.chunkDedupRewrite(docs, "doc_id", "text")
     val totalKept = out.agg(sum(col("n_kept"))).collect().head.getLong(0)

@@ -122,7 +122,6 @@ class DedupLibrarySpec extends SparkSuite {
 
   test("bucketed embedding near-dup: precision 1.0 and pinned recall vs all-pairs") {
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val exact = Dedup.embeddingNearDups(e, "vec_id", "embedding", threshold = 0.4)
       .select("vec_a", "vec_b", "cosine")
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
@@ -149,7 +148,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("minhash band pairs: subset of the exact Jaccard join with pinned recall") {
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val small = Tables(spark, "/root/testdata/sf0.001").documents
     val exact = Dedup.ngramJaccardPairs(small, "doc_id", "text", threshold = 0.5)
       .select("doc_a", "doc_b")
@@ -247,7 +245,6 @@ class DedupLibrarySpec extends SparkSuite {
 
   test("lshBuckets is deterministic across repartitioning") {
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val b1 = Dedup.lshBuckets(e, "vec_id", "embedding")
       .select("vec_id", "bucket")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -319,7 +316,6 @@ class DedupLibrarySpec extends SparkSuite {
 
   test("mutualKnnEdges ⊆ topk in both directions on the fixture table") {
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val topk = Dedup.annTopK(e, "vec_id", "embedding", lit(true), 3)
       .select("query_id", "neighbor_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -377,7 +373,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("simhash band blocking finds EVERY pair within hamming 3 (pigeonhole recall)") {
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val small = docs.filter(col("doc_id") < 200)
     val banded = Dedup.simhashHammingPairs(small, "doc_id", "text", maxHamming = 3)
       .select("doc_a", "doc_b", "hamming")
@@ -434,7 +429,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("banding recall curve: totals match exact pairs, identical docs always hit") {
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val small = Tables(spark, "/root/testdata/sf0.001").documents
     val out = Dedup.bandingRecallCurve(small, "doc_id", "text", minJaccard = 0.05)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -454,7 +448,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("embedding recall curve: partitions the exact pair inventory, hits bounded") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val emb = Tables(spark, "/root/testdata/sf0.001").embeddings
     val out = Dedup.embeddingBandingRecallCurve(emb, "vec_id", "embedding", 0.4)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
@@ -519,7 +512,6 @@ class DedupLibrarySpec extends SparkSuite {
     // candidate generator: every cosine-near pair surfaced by the
     // IVF-cell path (the exact pairs that seed x64's clusters) must land
     // in one split — and the split frame covers every vector exactly once
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.01").embeddings
     val split = Dedup.semanticSafeSplit(e, "vec_id", "embedding",
       threshold = 0.4, k = 16)
@@ -538,7 +530,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("x143 IVF-blocked near-dup: precision 1.0, pinned recall vs all-pairs x11") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val exact = Dedup.embeddingNearDups(e, "vec_id", "embedding", threshold = 0.4)
       .select("vec_a", "vec_b", "cosine")
@@ -558,7 +549,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("x147 multi-assign near-dup: precision 1.0, recall >= and superset of single-assign") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.001").embeddings
     val exact = Dedup.embeddingNearDups(e, "vec_id", "embedding", threshold = 0.4)
       .select("vec_a", "vec_b")
@@ -584,7 +574,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("x148 two-level router: every vector assigned exactly once, pairs subset of exact") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val e = Tables(spark, "/root/testdata/sf0.01").embeddings
     val n = e.count()
     val assigned = Dedup.ivfAssignTwoLevel(e, "vec_id", "embedding", k = 64, kc = 8)
@@ -604,7 +593,6 @@ class DedupLibrarySpec extends SparkSuite {
   }
 
   test("IVF twins x137/x138 agree with the exact x59/x89 baselines within pinned bounds") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val emb = Tables(spark, "/root/testdata/sf0.01").embeddings
     def pairs(df: org.apache.spark.sql.DataFrame, a: String, b: String) =
       df.select(col(a), col(b)).collect()

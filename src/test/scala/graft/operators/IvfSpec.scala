@@ -19,7 +19,6 @@ class IvfSpec extends SparkSuite {
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
 
   test("ivfAssign: every vector lands in exactly one of k cells") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val assigned = Dedup.ivfAssign(emb, "vec_id", "embedding", k = 8).cache()
     assert(assigned.count() === emb.count())
     val cells = assigned.select("cell").distinct()
@@ -29,7 +28,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("one Lloyd round keeps assignment total and exhaustive probing exact") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     // assignment after refinement is still a partition of the corpus over
     // the original seed cell ids
     val assigned = Dedup.ivfAssign(emb, "vec_id", "embedding", k = 8, lloydIters = 1).cache()
@@ -46,7 +44,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("one Lloyd round recomputes centroids as exact quantized per-cell means") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     // driver-side replica of assign(seeds) → per-cell mean → reassign,
     // with FloatVecDot's exact arithmetic (sequential double
     // accumulation, ties to the lowest cent_id) and the engine's
@@ -88,7 +85,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("one Lloyd round: refined probe recall within noise of the seeds'") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     // the fixture is UNIFORM random — no density modes, so refinement is
     // a statistical no-op here (its win is on clustered distributions);
     // the pin is that it cannot materially degrade either
@@ -110,7 +106,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("ivfSearch recall grows with nprobe; full probe == brute force") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val pred = col("query_id") < 10
     val exact = topkSets(
       Dedup.annTopK(emb, "vec_id", "embedding", pred, k = 5))
@@ -129,7 +124,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("three-level assignment: every vector lands in exactly one fine cell") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val assigned = Dedup.ivfAssignThreeLevel(
       emb, "vec_id", "embedding", k = 32, kcm = 9, kct = 3).cache()
     assert(assigned.count() === emb.count())
@@ -141,7 +135,6 @@ class IvfSpec extends SparkSuite {
   }
 
   test("ivfSearchRouted: levels=3 flag switches the route, default stays two-level") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val pred = col("query_id") < 20
     def lists(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -190,7 +183,6 @@ class IvfSpec extends SparkSuite {
     //    routing, or tie-break change that moves ANY (query, neighbor)
     //    pair fails here instead of silently shifting the crossover
     //    measurement.
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val clustered = emb.withColumn("embedding",
       graft.GenSf.clusteredEmbedding(col("vec_id"), col("embedding"))).cache()
     val n = clustered.count()

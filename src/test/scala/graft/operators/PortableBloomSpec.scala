@@ -62,7 +62,6 @@ class PortableBloomSpec extends SparkSuite {
   }
 
   test("x146 auto-k matches embeddingNearDupsIvf at k=floor(sqrt(n))") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val n = t.embeddings.count()
     val k = math.max(16, math.sqrt(n.toDouble).toInt)
     val auto = TrainingData.all.find(_.name == "x146_embedding_neardup_ivf_auto").get

@@ -23,7 +23,6 @@ class PqSpec extends SparkSuite {
       .groupBy(_._1).map { case (q, rs) => q -> rs.map(_._2).toSet }
 
   test("pqCodes: total m-way encoding, codes in [0, ks), codebook fixed points") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val n = emb.count()
     val codes = Dedup.pqCodes(emb, "vec_id", "embedding").cache()
     // every vector gets exactly one code per subspace
@@ -40,7 +39,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("re-rank recovers exactly the shortlist ∩ exact-top-k, beating ADC-only") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val pred = col("query_id") < 10
     def embPred = col("vec_id") < 10
     val exact = topkSets(Dedup.pqQuantizedExactTopK(emb, "vec_id", "embedding", embPred, topK = 5))
@@ -63,7 +61,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("packed codes unpack back to exactly pqCodes (8 bytes carries all 8 ids)") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val packed = Dedup.pqCodesPacked(emb, "vec_id", "embedding")
     val unpacked = packed.select(col("vec_id"),
         explode(sequence(lit(0), lit(7))).as("sub"),
@@ -78,7 +75,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("IVFADC: routed shortlists beat full-corpus ADC shortlists (purity effect)") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val pred = col("vec_id") < 10
     val exact = topkSets(Dedup.pqQuantizedExactTopK(emb, "vec_id", "embedding", pred, topK = 5))
     val ivfpq = topkSets(Dedup.ivfPqSearch(emb, "vec_id", "embedding", pred,
@@ -98,7 +94,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("trained codebook: Lloyd never increases distortion; recall holds on clustered vectors") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     import spark.implicits._
     // clustered corpus with a deliberately MIS-CENTERED seed book: the
     // first 16 vectors (the seed codebook) all sit in cluster 0, the
@@ -158,7 +153,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("ADC plan never touches corpus vectors: code frame joins only broadcast tables") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val plan = Dedup.pqSearch(emb, "vec_id", "embedding", col("vec_id") < 10, topK = 5)
       .queryExecution.executedPlan.toString
     // the distance-table join into the codes is a broadcast hash join —
@@ -168,7 +162,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("OPQ permutation: bijection, variance spread one-per-subspace, isometry, recall") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     import spark.implicits._
     // variance-skewed CONTINUOUS corpus — dims 0..7 are iid U(−1, 1)
     // (all the neighbor-determining variance), dims 8..63 tiny jitter.
@@ -260,7 +253,6 @@ class PqSpec extends SparkSuite {
   }
 
   test("trained RVQ: residual k-means cuts distortion and holds recall on clustered vectors") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     import spark.implicits._
     // clustered corpus with BOTH codebooks deliberately mis-seeded: the
     // first 32 vectors (stage-1 seeds AND stage-2 donors) all sit in

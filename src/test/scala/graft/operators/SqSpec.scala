@@ -44,7 +44,6 @@ class SqSpec extends SparkSuite {
   }
 
   test("SQ8 top-5 recall is near-exact and at or above PQ ADC-only recall") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val embPred = col("vec_id") < 10
     val exact = topkSets(
       Dedup.pqQuantizedExactTopK(emb, "vec_id", "embedding", embPred, topK = 5))
@@ -60,7 +59,6 @@ class SqSpec extends SparkSuite {
   }
 
   test("IVF+SQ8: cell routing is the only recall loss vs flat SQ8") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val embPred = col("vec_id") < 10
     val n = emb.count()
     val k = math.max(16, math.sqrt(n.toDouble).toInt)
@@ -79,7 +77,6 @@ class SqSpec extends SparkSuite {
   }
 
   test("SQ8 re-rank recovers exactly the shortlist ∩ exact-top-5") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val embPred = col("vec_id") < 10
     val exact = topkSets(
       Dedup.pqQuantizedExactTopK(emb, "vec_id", "embedding", embPred, topK = 5))

@@ -70,7 +70,6 @@ class TrainingDataSpec extends SparkSuite {
   }
 
   test("x189 on gapped ids: every LCG draw resolves; output == local replay") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val base = Tables(spark, "/root/testdata/sf0.001").embeddings
     // a hostile id space: a dropped residue class (20 % of the draw
     // range [0, n) names no row) plus a far-shifted tail — while keeping
@@ -89,7 +88,6 @@ class TrainingDataSpec extends SparkSuite {
   }
 
   test("x189 on snowflake-magnitude ids: rank-seeded LCG can't overflow") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val base = Tables(spark, "/root/testdata/sf0.001").embeddings
     // ids in the ~9e17 snowflake regime: the round-14 id-seeded
     // multiply `query_id * 48271` wraps negative here (9e17 · 48271 ≫

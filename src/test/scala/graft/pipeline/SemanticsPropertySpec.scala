@@ -115,7 +115,6 @@ class SemanticsPropertySpec extends SparkSuite {
 
   test("simhash banding == brute-force hamming on random word-soup corpora") {
     import spark.implicits._
-    graft.functions.PolyHashFunctions.ensureRegistered(spark)
     val vocab = Vector("alpha", "beta", "gamma", "delta", "eps", "zeta", "eta")
     (1 to 3).foreach { seed =>
       val rnd = new Random(seed)

@@ -51,7 +51,6 @@ class DeterminismSpec extends SparkSuite {
     .sorted.toSeq
 
   test("representative queries are bit-identical under different shuffle partitioning") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val qs = SparkEntry.queries
     for (name <- names) {
       val a = image(qs(name)(spark, sf))

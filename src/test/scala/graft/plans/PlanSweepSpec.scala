@@ -53,7 +53,6 @@ class PlanSweepSpec extends SparkSuite {
   private val cartesianOk: Set[String] = Set.empty
 
   test("no registered query plans an unpartitioned Window outside the whitelist") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.optimizedPlan
       val globals = plan.collect { case w: LWindow if w.partitionSpec.isEmpty => w }
@@ -63,7 +62,6 @@ class PlanSweepSpec extends SparkSuite {
   }
 
   test("no registered query plans a CartesianProduct outside the whitelist") {
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val p = fn(spark, sf).queryExecution.sparkPlan.toString
       if (p.contains("CartesianProduct") && !cartesianOk(name)) Some(name) else None
@@ -83,7 +81,6 @@ class PlanSweepSpec extends SparkSuite {
     * asserting it false asserts the generated loop is branch-free). */
   test("vector kernels are branch-free on every registered query's canonical plan") {
     import graft.functions.{FloatVecDot, LongVecDot, LongVecSqDist, VectorExpressions}
-    graft.functions.VectorExpressions.ensureRegistered(spark)
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val plan = fn(spark, sf).queryExecution.optimizedPlan
       val branchy = scala.collection.mutable.ListBuffer[String]()

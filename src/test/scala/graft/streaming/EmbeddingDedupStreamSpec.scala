@@ -23,7 +23,6 @@ class EmbeddingDedupStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.ensureRegistered(spark)
 
     val root = Files.createTempDirectory("embdedup-stream").toString
     val (registryPath, pairsPath, ckpt) =

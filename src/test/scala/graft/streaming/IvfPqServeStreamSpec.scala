@@ -19,7 +19,6 @@ class IvfPqServeStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.ensureRegistered(spark)
 
     val root = Files.createTempDirectory("ivfpq-serve").toString
     val emb = Tables(spark, sf).embeddings
@@ -72,7 +71,6 @@ class IvfPqServeStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.ensureRegistered(spark)
 
     val root = Files.createTempDirectory("ivfpq-serve-tr").toString
     val emb = Tables(spark, sf).embeddings

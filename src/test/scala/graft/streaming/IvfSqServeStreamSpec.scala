@@ -19,7 +19,6 @@ class IvfSqServeStreamSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.ensureRegistered(spark)
 
     val root = Files.createTempDirectory("ivfsq-serve").toString
     val emb = Tables(spark, sf).embeddings

@@ -124,7 +124,6 @@ class RegistryCompactionStreamsSpec extends SparkSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.VectorExpressions.ensureRegistered(spark)
 
     val t = Tables(spark, sf)
     val docs = t.documents.filter(col("doc_id") < 60)
